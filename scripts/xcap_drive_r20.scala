@@ -2,11 +2,11 @@
 // verify-fetch face, measured at the same 520x corpus as the r18/r19
 // drives (1.04M vectors, nlist 4160, broadcast quantizer face).
 // dedup_semantic runs end-to-end with the verify-fetch face FORCED to
-// shuffle-hash (the past-FetchBroadcastMaxBytes regime) twice per arm:
-// screen=off (the r19 shuffle face verbatim) vs screen=on (int8 codes
-// fetched first, only upper-bound survivors fetch raw floats). Rows
-// must be identical (the screen is lossless); the shuffle bytes and the
-// warm wall are the measurement. Results recorded in docs/PLANS_r20.md.
+// shuffle-hash (the past-FetchBroadcastMaxBytes regime), twice. The
+// screen=off arm (the r19 shuffle face verbatim) ran behind a system
+// property that has since been removed; its numbers, next to the
+// screen=on arm's, are recorded in docs/PLANS_r20.md. The shuffle bytes
+// and the warm wall are the measurement.
 object XCapDrive20 {
   def run(): Unit = {
     val s = spark
@@ -17,27 +17,19 @@ object XCapDrive20 {
       graft.ScaleCorpus.generateEmbeddings(s, fit, 520, 2016L,
         s"$dir/embeddings.parquet")
     }
-    val probe = new graft.metrics.TaskMetricsProbe
-    s.sparkContext.addSparkListener(probe)
+    val collector = graft.metrics.JobGroupCollector.attach(s)
     sys.props("graft.verifyFetchFace") = "shuffle"
-    def one(screen: String, i: Int): Unit = {
-      sys.props("graft.int8Screen") = screen
+    for (i <- 1 to 2) {
       graft.ScaleReport.settle(s)
-      val label = s"xcap20/$screen#$i"
-      s.sparkContext.setJobGroup(label, label, false)
-      val t0 = System.nanoTime
-      val c = graft.SparkEntry.queries("dedup_semantic")(s, dir).count()
-      s.sparkContext.clearJobGroup()
-      val w = (System.nanoTime - t0) / 1e9
-      probe.quiesce(sc = s.sparkContext)
-      val st = probe.snapshot(label).get
-      println(f"##XCAP20## screen=$screen run=$i rows=$c wall=$w%.1f " +
+      val r = collector.run(s"xcap20/on#$i")(
+        graft.SparkEntry.queries("dedup_semantic")(s, dir)).checked
+      val st = r.totals
+      println(f"##XCAP20## screen=on run=$i wall=${r.wallSec.get}%.1f " +
         f"shufW=${st.shuffleWriteBytes / 1e9}%.2fGB shufR=${st.shuffleReadBytes / 1e9}%.2fGB " +
         f"peak=${st.peakTaskMemory / 1e6}%.1fMB spillD=${st.diskSpillBytes / 1e9}%.2fGB")
     }
-    for (screen <- Seq("off", "on"); i <- 1 to 2) one(screen, i)
+    collector.close()
     sys.props.remove("graft.verifyFetchFace")
-    sys.props.remove("graft.int8Screen")
   }
 }
 XCapDrive20.run()

@@ -1,11 +1,15 @@
 package graft
+import graft.metrics.JobGroupCollector
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
-  * Queries are fully materialized via a noop write (count() would let
-  * Catalyst prune most of the work). */
+  * SPARK_GRAFT_SF_DIR through [[JobGroupCollector.run]] (a noop write
+  * materializes the query fully — count() would let Catalyst prune most
+  * of the work) and prints the full JSON record with per-query seconds,
+  * then a compact `"metric":"summary"` line as the LAST stdout line.
+  * Queries that threw are listed under `"failed"`, outside `queries`
+  * and `total`. */
 object Bench {
   /** 1-minute load average and the number of OTHER JVMs running — a
     * contended host inflates results 3-6x (the r2 driver reading was 4x
@@ -127,14 +131,13 @@ object Bench {
 
     // two passes per query, report the min: pass 1 pays codegen compile
     // and page-cache warmup, pass 2 approximates steady-state throughput
-    // (what a long-running cluster job sees).
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
+    // (what a long-running cluster job sees). A pass that throws has no
+    // time: the query is listed under "failed", never timed.
+    val collector = JobGroupCollector.attach(spark)
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+      val r = collector.run(name)(fn(spark, sfDir))
+      r.error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      r.wallSec
     }
     // SPARK_GRAFT_QUERIES=a,b,c restricts the run to a subset — for
     // timing one query's change without paying the full sweep.
@@ -158,21 +161,23 @@ object Bench {
     val reruns = scala.collection.mutable.LinkedHashMap[String, Int]()
     val suspects = scala.collection.mutable.ListBuffer[String]()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var best = math.min(once(name, fn), once(name, fn))
+      var best = for (a <- once(name, fn); b <- once(name, fn)) yield math.min(a, b)
       baseline.get(name).filter(_ > 0).foreach { solo =>
         var extra = 0
-        while (best > 3 * solo && extra < 2) {
+        while (best.exists(_ > 3 * solo) && extra < 2) {
           extra += 1
-          best = math.min(best, once(name, fn))
+          best = for (b <- best; r <- once(name, fn)) yield math.min(b, r)
         }
         if (extra > 0) reruns(name) = extra
-        if (best > 3 * solo) suspects += name
+        if (best.exists(_ > 3 * solo)) suspects += name
       }
       name -> best
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => k }
+    val qs = timed.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = timed.map(_._2).sum
     val (loadEnd, jvmsEnd) = loadState()
     // The contention verdict goes INTO the record, not just stderr: a
     // reader of the JSON alone (the round judge) must see whether the
@@ -194,25 +199,24 @@ object Bench {
       if (reruns.isEmpty) ""
       else reruns.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","reruns":{""", ",", "}")
-    val suspectJson =
-      if (suspects.isEmpty) ""
-      else suspects.map("\"" + _ + "\"").mkString(""","suspect":[""", ",", "]")
-    val record = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadavg%.2f,"loadavg_end":$loadEnd%.2f,"other_jvms_start":$otherJvms,"other_jvms_end":$jvmsEnd,"contended":$contended$rerunJson$suspectJson$warn${soloRecordJson()}}"""
+    def names(key: String, xs: Seq[String]): String =
+      if (xs.isEmpty) "" else xs.map("\"" + _ + "\"").mkString(s""","$key":[""", ",", "]")
+    val record = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadavg%.2f,"loadavg_end":$loadEnd%.2f,"other_jvms_start":$otherJvms,"other_jvms_end":$jvmsEnd,"contended":$contended$rerunJson${names("suspect", suspects.toSeq)}${names("failed", failed)}$warn${soloRecordJson()}}"""
     println(record)
-    // r21 measurement-harness fix (judge item 2): the full record is
-    // ~7 KB for 181 queries and the driver keeps only a 2000-char tail
-    // of stdout, which truncates the line mid-object — every
-    // BENCH_r*.json since r01 carries parsed:null. The full record is
-    // ALSO written to a fixed file, and stdout ENDS with a compact
-    // summary line (<500 bytes, guaranteed to survive any tail) naming
-    // that file. The contractual full JSON line above is unchanged.
-    val resultFile = sys.env.getOrElse("SPARK_GRAFT_RESULT_FILE", "BENCH_RESULT.json")
+    // The full record is ~7 KB for 181 queries, and a reader that keeps
+    // only a 2000-char tail of stdout truncates it mid-object. So the
+    // full record is ALSO written to a per-run file (overlapping runs
+    // never clobber each other), and stdout ENDS with a compact summary
+    // line (<500 bytes, "metric":"summary") naming that file.
+    val resultFile = sys.env.getOrElse("SPARK_GRAFT_RESULT_FILE",
+      s"BENCH_RESULT_${ProcessHandle.current().pid()}.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(resultFile), record + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] result-file write failed: ${e.getMessage}")
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","cpus":"$cpus","contended":$contended,"result_file":"$resultFile"}""")
+    collector.close()
+    println(f"""{"metric":"summary","value":$total%.3f,"unit":"sec","n_queries":${timed.size},"n_failed":${failed.size},"sf":"$sfDir","cpus":"$cpus","contended":$contended,"result_file":"$resultFile"}""")
     spark.stop()
   }
 }

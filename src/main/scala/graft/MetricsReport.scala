@@ -169,37 +169,25 @@ object MetricsReport {
     ccEdges.unpersist(blocking = false)
 
     // 3c. per-query memory/shuffle/spill footprint (r9 ask #5): the ten
-    // most expensive queries re-run under a labeled job group with a
-    // TaskMetricsProbe attached, executed via the noop sink (full
-    // execution, nothing collected). peak_task_memory_bytes is the
-    // executor-sizing number; spills > 0 at measurement SF would flag a
-    // query that cannot claim the 100× story.
-    val probe = new graft.metrics.TaskMetricsProbe
-    spark.sparkContext.addSparkListener(probe)
+    // most expensive queries re-run under a labeled job group
+    // (JobGroupCollector.run — full execution via the noop sink, nothing
+    // collected). peak_task_memory_bytes is the executor-sizing number;
+    // spills > 0 at measurement SF would flag a query that cannot claim
+    // the 100× story.
     val resourceQueries = Seq("dedup_clusters", "pipeline_curate_full",
       "match_entities", "dedup_embedding_cosine", "dedup_containment",
       "dedup_minhash_pairs", "ann_ivfpq_residual_topk", "dedup_spans_cut",
       "mix_quality_buckets", "search_bm25")
-    val resources =
-      try resourceQueries.map { q =>
-        spark.sparkContext.setJobGroup(q, s"resource probe: $q",
-          interruptOnCancel = false)
-        try SparkEntry.queries(q)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        finally spark.sparkContext.clearJobGroup()
-        probe.quiesce(sc = spark.sparkContext)
-        // fail-loud (the missing-CC-verdict discipline): an unattributed
-        // run must never write an all-zero row indistinguishable from a
-        // genuinely free query into the tracked artifact
-        val st = probe.snapshot(q).getOrElse(
-          throw new IllegalStateException(s"no task metrics attributed to '$q'"))
-        require(st.tasks > 0, s"resource probe saw zero tasks for '$q'")
-        q -> st
-      } finally
-        // release EVEN when a fail-loud throw aborts the loop: the probe
-        // must not keep accumulating through the skew joins and streaming
-        // benches below (nor grow stageGroup unbounded)
-        spark.sparkContext.removeSparkListener(probe)
+    // fail-loud (checked): an unattributed run must never write an
+    // all-zero row indistinguishable from a genuinely free query into
+    // the tracked artifact. Using releases the listener EVEN when a
+    // throw aborts the loop, so it stops recording before the skew
+    // joins and streaming benches below.
+    val resources = scala.util.Using.resource(
+        graft.metrics.JobGroupCollector.attach(spark)) { collector =>
+      resourceQueries.map(q =>
+        q -> collector.run(q)(SparkEntry.queries(q)(spark, sfDir)).checked.totals)
+    }
 
     // 3d. SkewGuard fired by REAL data (r9 ask #7): at measurement SF no
     // natural band crosses the cap, so the guard's salted path had only

@@ -1,6 +1,6 @@
 package graft
 
-import graft.metrics.{ResourceStats, StageMetricsProbe, TaskMetricsProbe}
+import graft.metrics.{JobGroupCollector, ResourceStats}
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
  * peak task memory flat (it is partition-sized, not data-sized).
  *
  * Also attributes `pipeline_curate_full`'s fixed job latency PER STAGE
- * ([[StageMetricsProbe]]) — the per-stage wall/task/shuffle table that
- * replaces the "fixed overhead across ~11 stages" inference.
+ * ([[JobGroupCollector]] stage rows) — the per-stage wall/task/shuffle
+ * table that replaces the "fixed overhead across ~11 stages" inference.
  */
 object ScaleReport {
 
@@ -68,31 +68,22 @@ object ScaleReport {
     * localCheckpointed RDD truncates its lineage — a caller holding a
     * checkpointed frame ACROSS a settle() gets
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next use (measured: the
-    * TwoLevelRecallProbe p-loop). Every sweep row rebuilds its frames
-    * from SparkEntry.queries, which is what makes the hook sound here. */
+    * two-level recall p-loop, docs/PLANS_r19.md). Every sweep row
+    * rebuilds its frames from SparkEntry.queries, which is what makes
+    * the hook sound here. */
   def settle(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     (1 to 2).foreach { _ => System.gc(); Thread.sleep(400) }
   }
 
-  private def runLabeled(spark: SparkSession, probe: TaskMetricsProbe,
+  private def runLabeled(spark: SparkSession, collector: JobGroupCollector,
       q: String, dir: String, label: String): (Double, ResourceStats) = {
     // every measured run starts from the same JVM state: no foreign
     // cached blocks, cleaner queue drained, heap compacted
     settle(spark)
-    spark.sparkContext.setJobGroup(label, s"scale probe: $label",
-      interruptOnCancel = false)
-    val t0 = System.nanoTime()
-    try SparkEntry.queries(q)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    finally spark.sparkContext.clearJobGroup()
-    val wall = (System.nanoTime() - t0) / 1e9
-    probe.quiesce(sc = spark.sparkContext)
-    val st = probe.snapshot(label).getOrElse(
-      throw new IllegalStateException(s"no task metrics for '$label'"))
-    require(st.tasks > 0, s"zero tasks attributed to '$label'")
-    (wall, st)
+    val r = collector.run(label)(SparkEntry.queries(q)(spark, dir)).checked
+    (r.wallSec.get, r.totals)
   }
 
   private def d2(x: Double): String =
@@ -127,14 +118,14 @@ object ScaleReport {
     * plus the hi/lo ratios the scaling claim lives on. `ratioSuffix`
     * names the ratio keys (the gate only reads `_ratio_10x` rows — the
     * x30 decade rows are evidence, not gate inputs). */
-  private def queryRow(spark: SparkSession, probe: TaskMetricsProbe,
+  private def queryRow(spark: SparkSession, collector: JobGroupCollector,
       q: String, rowName: String, scales: Seq[(String, String)],
       loTag: String, hiTag: String, ratioSuffix: String = "10x"): String = {
     val per = scales.map { case (tag, dir) =>
       // min of 2: run 1 pays one-time artifact builds (FixtureStore)
       // and codegen; run 2 is the steady state the ratio compares
       val runs = (1 to 2).map(i =>
-        runLabeled(spark, probe, q, dir, s"$rowName@$tag#$i"))
+        runLabeled(spark, collector, q, dir, s"$rowName@$tag#$i"))
       // output size is the yardstick superlinear walls are judged
       // against: an operator whose TRUE pair mass is quadratic in
       // this corpus (e.g. cosine pairs at a low threshold) is
@@ -244,7 +235,7 @@ object ScaleReport {
     * (so exactly nprobe cells are touched), and record: the on-disk
     * code bytes total vs the probed cells' bytes (filesystem truth),
     * and the labeled probe run's task-metrics input bytes. */
-  private def ivfpqProbeJson(spark: SparkSession, probe: TaskMetricsProbe,
+  private def ivfpqProbeJson(spark: SparkSession, collector: JobGroupCollector,
       dirs: Seq[(String, String)]): String = {
     import org.apache.spark.sql.functions.col
     def duData(f: java.io.File): Long = {
@@ -267,24 +258,16 @@ object ScaleReport {
       val probedBytes = cells.map(c =>
         duData(new java.io.File(s"$path/codes/epoch=0/cell=$c"))).sum
       val embBytes = duData(new java.io.File(s"$dir/embeddings.parquet"))
-      val label = s"ivfpq_probe@$tag"
-      spark.sparkContext.setJobGroup(label, label, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      try graft.operators.IvfIndex.probePq(spark, path, emb, q, nprobe = nprobe)
-        .write.format("noop").mode("overwrite").save()
-      finally spark.sparkContext.clearJobGroup()
-      val wall = (System.nanoTime() - t0) / 1e9
-      probe.quiesce(sc = spark.sparkContext)
-      val st = probe.snapshot(label).getOrElse(
-        throw new IllegalStateException(s"no task metrics for '$label'"))
+      val r = collector.run(s"ivfpq_probe@$tag")(
+        graft.operators.IvfIndex.probePq(spark, path, emb, q, nprobe = nprobe)).checked
       s"""    "$tag": {"nlist": ${cents.size}, "nprobe": $nprobe, """ +
         s""""probed_cells": [${cells.mkString(", ")}], """ +
         s""""codes_total_bytes": $codesTotal, """ +
         s""""probed_cells_bytes": $probedBytes, """ +
         s""""probed_fraction": ${d2(probedBytes.toDouble / math.max(1L, codesTotal))}, """ +
         s""""embeddings_bytes": $embBytes, """ +
-        s""""probe_input_bytes": ${st.inputBytes}, """ +
-        s""""probe_wall_sec": ${d2(wall)}}"""
+        s""""probe_input_bytes": ${r.totals.inputBytes}, """ +
+        s""""probe_wall_sec": ${d2(r.wallSec.get)}}"""
     }.mkString(",\n")
   }
 
@@ -296,7 +279,7 @@ object ScaleReport {
     * the labeled probe run's task-metrics input bytes and the term
     * selectivity (probed terms / vocabulary partitions), per corpus
     * per round. */
-  private def textProbeJson(spark: SparkSession, probe: TaskMetricsProbe,
+  private def textProbeJson(spark: SparkSession, collector: JobGroupCollector,
       dirs: Seq[(String, String)]): String = {
     def duData(f: java.io.File): Long = {
       val kids = Option(f.listFiles()).getOrElse(Array.empty)
@@ -314,24 +297,16 @@ object ScaleReport {
       val terms = graft.operators.Search.QueryTerms
       val probedBytes = terms.map(t =>
         duData(new java.io.File(s"$path/postings/term=$t"))).sum
-      val label = s"text_probe@$tag"
-      spark.sparkContext.setJobGroup(label, label, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      try graft.operators.Search.probeTextIndex(spark, path, terms)
-        .write.format("noop").mode("overwrite").save()
-      finally spark.sparkContext.clearJobGroup()
-      val wall = (System.nanoTime() - t0) / 1e9
-      probe.quiesce(sc = spark.sparkContext)
-      val st = probe.snapshot(label).getOrElse(
-        throw new IllegalStateException(s"no task metrics for '$label'"))
+      val r = collector.run(s"text_probe@$tag")(
+        graft.operators.Search.probeTextIndex(spark, path, terms)).checked
       s"""    "$tag": {"query_terms": ${terms.size}, """ +
         s""""term_partitions": ${termDirs.length}, """ +
         s""""term_fraction": ${d2(terms.size.toDouble / math.max(1, termDirs.length))}, """ +
         s""""postings_total_bytes": $total, """ +
         s""""probed_terms_bytes": $probedBytes, """ +
         s""""probed_fraction": ${d2(probedBytes.toDouble / math.max(1L, total))}, """ +
-        s""""probe_input_bytes": ${st.inputBytes}, """ +
-        s""""probe_wall_sec": ${d2(wall)}}"""
+        s""""probe_input_bytes": ${r.totals.inputBytes}, """ +
+        s""""probe_wall_sec": ${d2(r.wallSec.get)}}"""
     }.mkString(",\n")
   }
 
@@ -352,23 +327,22 @@ object ScaleReport {
       loadAtStart.getOrElse(graft.metrics.HostLoad.state())
     val contended = graft.metrics.HostLoad.contended(
       Runtime.getRuntime.availableProcessors(), loadavg, otherJvms)
-    val probe = new TaskMetricsProbe
-    spark.sparkContext.addSparkListener(probe)
+    val collector = JobGroupCollector.attach(spark)
     try {
       val scales = Seq("sf0_1" -> realDir, "x1" -> x1, "x10" -> x10)
       val rows = HeavyFamily.map(q =>
-        queryRow(spark, probe, q, q, scales, "x1", "x10")) :+
+        queryRow(spark, collector, q, q, scales, "x1", "x10")) :+
         // containment on the GROWING-vocabulary corpus: the claim is
         // linear wall/shuffle here; the bounded-vocab twin above is the
         // adversarial worst case (candidates Θ(N²/V) by construction)
-        queryRow(spark, probe, "dedup_containment", "dedup_containment_heaps",
+        queryRow(spark, collector, "dedup_containment", "dedup_containment_heaps",
           Seq("hx1" -> hx1, "hx10" -> hx10), "hx1", "hx10")
       val x30 = ensureCorpora30(spark, realDir)
       val hx30 = ensureHeaps30(spark, realDir)
       val rows30 = DecadeFamily.map(q =>
-        queryRow(spark, probe, q, s"${q}_x30",
+        queryRow(spark, collector, q, s"${q}_x30",
           Seq("x1" -> x1, "x30" -> x30), "x1", "x30", "30x")) :+
-        queryRow(spark, probe, "dedup_containment",
+        queryRow(spark, collector, "dedup_containment",
           "dedup_containment_heaps_x30",
           Seq("hx1" -> hx1, "hx30" -> hx30), "hx1", "hx30", "30x")
       s"""{
@@ -387,16 +361,16 @@ object ScaleReport {
              "x30" -> x30))}
          |  },
          |  "ivfpq_probe": {
-         |${ivfpqProbeJson(spark, probe, Seq("x1" -> x1, "x10" -> x10))}
+         |${ivfpqProbeJson(spark, collector, Seq("x1" -> x1, "x10" -> x10))}
          |  },
          |  "text_probe": {
-         |${textProbeJson(spark, probe, Seq("x1" -> x1, "x10" -> x10))}
+         |${textProbeJson(spark, collector, Seq("x1" -> x1, "x10" -> x10))}
          |  },
          |  "queries": {
          |${(rows ++ rows30).mkString(",\n")}
          |  }
          |}""".stripMargin
-    } finally spark.sparkContext.removeSparkListener(probe)
+    } finally collector.close()
   }
 
   private def esc(s: String): String =
@@ -409,39 +383,27 @@ object ScaleReport {
 
   /** Per-stage attribution of any registered query at `dir`. */
   def stagesJson(spark: SparkSession, q: String, dir: String): String = {
-    val stageProbe = new StageMetricsProbe
-    val taskProbe = new TaskMetricsProbe // reuse its quiesce
-    spark.sparkContext.addSparkListener(stageProbe)
-    spark.sparkContext.addSparkListener(taskProbe)
+    val collector = JobGroupCollector.attach(spark)
     try {
-      // warm run unlabeled (codegen/artifacts), measured run labeled
-      SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val label = s"$q@stages"
-      spark.sparkContext.setJobGroup(label, label, interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      finally spark.sparkContext.clearJobGroup()
-      val wall = (System.nanoTime() - t0) / 1e9
-      taskProbe.quiesce(sc = spark.sparkContext)
-      val st = stageProbe.stages(label)
-      require(st.nonEmpty, s"no stages attributed to $q")
+      // warm run (codegen/artifacts), then the measured run
+      collector.run(s"$q@warm")(SparkEntry.queries(q)(spark, dir)).checked
+      val r = collector.run(s"$q@stages")(SparkEntry.queries(q)(spark, dir)).checked
+      val st = r.stages
       // tiny corpora can report every stage at 0 ms — a 0/0 share would
       // emit NaN and make the artifact unparseable
       val wallSum = math.max(1.0, st.map(_.wallMs).sum.toDouble)
       val top = st.maxBy(_.wallMs)
       val rows = st.map { s =>
         s"""    {"stage_id": ${s.stageId}, "wall_ms": ${s.wallMs}, """ +
-          s""""tasks": ${s.tasks}, "shuffle_read_bytes": ${s.shuffleReadBytes}, """ +
-          s""""shuffle_write_bytes": ${s.shuffleWriteBytes}, """ +
-          s""""input_bytes": ${s.inputBytes}, "spill_bytes": ${s.spillBytes}, """ +
+          s""""tasks": ${s.res.tasks}, "shuffle_read_bytes": ${s.res.shuffleReadBytes}, """ +
+          s""""shuffle_write_bytes": ${s.res.shuffleWriteBytes}, """ +
+          s""""input_bytes": ${s.res.inputBytes}, "spill_bytes": ${s.res.spillBytes}, """ +
           s""""name": "${esc(s.name)}"}"""
       }.mkString(",\n")
       s"""{
          |  "query": "$q",
          |  "sf_dir": "$dir",
-         |  "wall_sec": ${d2(wall)},
+         |  "wall_sec": ${d2(r.wallSec.get)},
          |  "stage_count": ${st.size},
          |  "top_stage_id": ${top.stageId},
          |  "top_stage_share_of_stage_walls": ${d2(top.wallMs / wallSum)},
@@ -449,10 +411,7 @@ object ScaleReport {
          |$rows
          |  ]
          |}""".stripMargin
-    } finally {
-      spark.sparkContext.removeSparkListener(stageProbe)
-      spark.sparkContext.removeSparkListener(taskProbe)
-    }
+    } finally collector.close()
   }
 
   // ---- cross-round scaling regression gate (r17) ----------------------
@@ -502,7 +461,7 @@ object ScaleReport {
     * the r19 gate suspect): for these queries the ×10 peak-mem RATIO
     * grows by design, so the gate holds the ABSOLUTE instead.
     *
-    * Evidence (docs/PLANS_r20.md §1, PeakMemProbe/PeakMemProbe2):
+    * Evidence (docs/PLANS_r20.md §1, face A/B and per-stage peak drives):
     * `dedup_clusters`' 8.55× was (a) FACE-INDEPENDENT — bit-identical
     * 304.7 MB under the broadcast AND the forced shuffle-hash
     * verify-fetch face, refuting the "broadcast relation grows ∝ N"

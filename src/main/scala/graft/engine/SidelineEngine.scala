@@ -21,8 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    scheduler pools (see [[graft.engine.QueryCoordinator]]).
  *  - Offset snapshots are taken from the log's current high watermark at
  *    transition time (the reference snapshots consumer positions —
- *    SidelineSpoutHandler.java:359-383). In streaming mode snapshots align
- *    with micro-batch boundaries, which keeps firehose ∪ sideline exact.
+ *    SidelineSpoutHandler.java:359-383). That is exact only while the
+ *    firehose is quiesced: under a live firehose START's log-end snapshot
+ *    can sit above rows no batch has consumed yet, and those rows are
+ *    dropped and never replayed (ROADMAP open item 1, Defect A). A live
+ *    RESOLVE must stamp its ending from committed progress instead —
+ *    [[graft.streaming.StreamingFirehose.FirehoseHandle.resolveAtCommitted]];
+ *    START has no such twin yet.
  *  - The firehose predicate set is re-derived per call (per micro-batch in
  *    streaming) from the persisted control rows instead of a live
  *    ConcurrentHashMap — same visibility, no race.

@@ -100,12 +100,6 @@ object Dedup {
     * is -1, so the ShingleN filter drops exactly the rows the inline
     * split dropped. */
   private[operators] def ngramJaccardPairsFromToks(toksDf: DataFrame): DataFrame = {
-    // A/B knob (r21 judge item 8): GRAFT_NGRAM_PAIR_FACE=idpair /
-    // -Dgraft.ngramPairFace=idpair selects the id-pair band exchange +
-    // post-distinct shingle fetch face for byte/wall attribution;
-    // results are bit-identical. Default stays the shingles-ride face.
-    val idPairFace = sys.props.get("graft.ngramPairFace")
-      .orElse(sys.env.get("GRAFT_NGRAM_PAIR_FACE")).contains("idpair")
     // One pass computes shingles + signature + bands; ONE exchange
     // (hash-partitioned by band) materializes them, and BOTH sides of
     // the self-join read that same exchange (ReusedExchange — the r1.5
@@ -128,12 +122,32 @@ object Dedup {
       // 1 md5/shingle — native array_md5 kernel (same hex bytes as the
       // transform+md5 HOF the SQL twin spells out, suite-pinned)
       .withColumn("dg", graft.functions.VectorFunctions.arrayMd5(col("sh"), lit("")))
-    def withBands(df: DataFrame): DataFrame = df
+    val banded = withSh
       .withColumn("band", explode(array((0 until 4).map { b =>
         concat(lit(s"$b:"), expr(
           s"array_min(transform(dg, d -> substring(d, ${8 * b + 1}, 8)))"))
       }: _*)))
-    def verify(cand: DataFrame): DataFrame = cand
+      .select("doc_id", "sh", "band")
+      .repartition(col("band"))
+    // Exact verification BEFORE the pair-dedup: a pair sharing k bands
+    // is verified k times (k ≤ 4, duplicates are rare) and distinct()
+    // then dedupes the identical result rows — cheaper than a distinct
+    // on pairs followed by two corpus-wide fetch joins (the rejected
+    // id-pair face: the band exchange carries (doc_id, band) only,
+    // candidates distinct at id-pair width, then both sides' shingles
+    // attach through candidate-keyed joins; A/B measured r21 at sf0.1,
+    // bit-identical results: it shrinks the band exchange 8.7x, sw
+    // 32.2 -> 3.7 MB, but re-derives the md5 shingle signature for both
+    // fetch sides — walls 2.2 -> 3.8 s, tasks 274 -> 331. Shuffle
+    // compression already squeezes the repetitive shingle text ~4x on
+    // the wire, so the payload cut buys less than the extra passes cost
+    // — the r20 hash-screen rejection's mechanism, now isolated to the
+    // distinct half). Ratio guard +
+    // integer threshold (9i >= 4(n1+n2) ⇔ jaccard >= 0.8) keep
+    // array_intersect off obvious non-matches. Hot bands (boilerplate
+    // minhash values — every real corpus has them) are triangle-salted
+    // by SkewGuard; cold bands keep the shuffle-hash self-join.
+    SkewGuard.pairs(banded, "doc_id")
       .filter(least(size(col("sh_1")), size(col("sh_2"))) >=
         lit(0.8) * greatest(size(col("sh_1")), size(col("sh_2"))))
       .filter(lit(9) * size(array_intersect(col("sh_1"), col("sh_2"))) >=
@@ -143,41 +157,6 @@ object Dedup {
         (size(col("sh_1")) + size(col("sh_2")) - col("inter")))
       .select(col("doc_id_1"), col("doc_id_2"), round(col("jaccard"), 4).as("jaccard"))
       .distinct()
-    if (idPairFace) {
-      // id-pair face: the band exchange carries (doc_id, band) ONLY
-      // (the dedupFuzzyAgainstCatalog 62x discipline), candidates
-      // distinct at id-pair width, then BOTH sides' shingles re-derive
-      // and attach through candidate-keyed joins. Trades the shingle
-      // payload out of the band exchange for two extra shingle passes.
-      val cand = SkewGuard.pairs(
-          withBands(withSh).select("doc_id", "band").repartition(col("band")),
-          "doc_id")
-        .select("doc_id_1", "doc_id_2").distinct()
-      val sh = withSh.select(col("doc_id"), col("sh"))
-      verify(cand
-        .join(sh.select(col("doc_id").as("doc_id_1"), col("sh").as("sh_1")), "doc_id_1")
-        .join(sh.select(col("doc_id").as("doc_id_2"), col("sh").as("sh_2")), "doc_id_2"))
-    } else {
-      val banded = withBands(withSh).select("doc_id", "sh", "band")
-        .repartition(col("band"))
-      // Exact verification BEFORE the pair-dedup: a pair sharing k bands
-      // is verified k times (k ≤ 4, duplicates are rare) and distinct()
-      // then dedupes the identical result rows — cheaper than a distinct
-      // on pairs followed by two corpus-wide fetch joins (the id-pair
-      // face above; A/B re-measured r21 at sf0.1: idpair shrinks the
-      // band exchange 8.7x, sw 32.2 -> 3.7 MB, but re-derives the md5
-      // shingle signature for both fetch sides — walls 2.2 -> 3.8 s,
-      // tasks 274 -> 331. Shuffle compression already squeezes the
-      // repetitive shingle text ~4x on the wire, so the payload cut
-      // buys less than the extra passes cost — the r20 hash-screen
-      // rejection's mechanism, now isolated to the distinct half).
-      // Ratio guard +
-      // integer threshold (9i >= 4(n1+n2) ⇔ jaccard >= 0.8) keep
-      // array_intersect off obvious non-matches. Hot bands (boilerplate
-      // minhash values — every real corpus has them) are triangle-salted
-      // by SkewGuard; cold bands keep the shuffle-hash self-join.
-      verify(SkewGuard.pairs(banded, "doc_id"))
-    }
   }
 
   /** SQL twin of [[ngramJaccardPairs]] — reused (as a subquery) by the

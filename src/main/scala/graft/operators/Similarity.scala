@@ -391,11 +391,7 @@ object Similarity {
     * is exchange-free there, so the screen would only add joins. */
   private[graft] def int8Screen(emb: DataFrame, n: Long, cand: DataFrame,
       leftId: String, rightId: String, dim: Int = Dim): DataFrame =
-    // -Dgraft.int8Screen=off disables the screen on the shuffle face —
-    // the drive-side A/B isolating the screen's byte cut from the face
-    // choice (results are identical either way; the screen is lossless)
-    if (!shuffleFaceChosen(n, dim) ||
-        sys.props.get("graft.int8Screen").contains("off")) cand
+    if (!shuffleFaceChosen(n, dim)) cand
     else {
       val rootD2 = math.sqrt(dim.toDouble) / 2.0
       val dotq = graft.functions.VectorFunctions
@@ -782,12 +778,12 @@ object Similarity {
     * the suite's within-group pin: wherever the flat argmax's winner
     * lives in the probed group, two-level ≡ flat bit-for-bit.
     *
-    * Measured at 4.16M vectors / nlist 16640 (TwoLevelDrive): the
+    * Measured at 4.16M vectors / nlist 16640 (docs/PLANS_r18.md): the
     * assignment pass is 16.5 s vs flat's 686.6 s (42×) and the full
     * dedup_semantic completes deterministically — but single-probe
     * coarse assignment recovers only 16% cell agreement and 38% of the
     * dedup dropped set vs exact flat on this near-isotropic embedding
-    * family (TwoLevelRecallProbe at 500k; Lloyd training moved
+    * family (recall drive at 500k vectors; Lloyd training moved
     * agreement 13→16%, recall within noise). Kept suite-pinned for a
     * future clustered-embedding family or an explicit opt-in; never a
     * silent default. */

@@ -28,8 +28,8 @@ import org.apache.spark.sql.Row
  * dataflow, graft.retry.RetryFlow) go to the failed sink un-tracked.
  * Rows *dropped by the chain* are counted but NOT emitted anywhere — the
  * reference acks them invisibly (VirtualSpout.java:308-323); here the
- * offsets advance with the batch commit and the count surfaces via
- * `observe` metrics ("filtered" — F8 in SURVEY.md §2.2).
+ * offsets advance with the batch commit and the count surfaces as
+ * [[BatchMetrics.filtered]] through `onMetrics` (F8 in SURVEY.md §2.2).
  */
 object StreamingFirehose {
 
@@ -95,10 +95,13 @@ object StreamingFirehose {
    * parquet dir, Delta txn) — Spark replays a batch after a crash.
    *
    * Each batch is cached for the duration of its routing: the batch feeds
-   * up to two sinks plus one count aggregate, and a micro-batch is bounded
-   * (maxOffsetsPerTrigger), so the cache is small and saves re-reading the
-   * source 3×. Metrics come from ONE tiny groupBy over the cached batch,
-   * not from per-sink count() jobs.
+   * up to two sinks plus the aggregates below, and a micro-batch is
+   * bounded (maxOffsetsPerTrigger), so the cache is small and saves
+   * re-reading the source per consumer. Metrics come from one small
+   * `groupBy().collect()` over the cached batch, not from per-sink
+   * count() jobs; with a `handle`, a SECOND `groupBy().collect()` (max
+   * offset per partition) feeds the committed watermark — two aggregate
+   * jobs per batch.
    */
   def run(
       stream: DataFrame,

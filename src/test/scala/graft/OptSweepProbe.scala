@@ -1,17 +1,20 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import graft.metrics.JobGroupCollector
 
-import scala.collection.concurrent.TrieMap
-
-/** Round-20 optimization harness: one deterministic measurement row per
-  * declared query — wall (2nd pass, warm), task/stage counts, shuffle
-  * read/write bytes, input bytes, spill, peak task memory — plus the
-  * `explain("formatted")` text of every query, dumped to files. The byte
-  * and count columns are host-noise-free (identical across reps on one
-  * build), so before/after optimization evidence reads from THEM; walls
-  * are corroboration only (this session's host moved identical code
-  * ±2× run-to-run — the r17 worktree-A/B lesson re-measured).
+/** Optimization harness: one measurement row per declared query — wall
+  * (2nd pass, warm) split into construct (driver-side frame building,
+  * incl. any eager jobs) and exec (noop-sink execution) time, task/stage
+  * counts, shuffle read/write bytes, input bytes, spill, peak task memory
+  * — plus the `explain("formatted")` text of every query, dumped to
+  * files. The byte and count columns are free of host noise (identical
+  * across reps on one build for most queries), so before/after
+  * optimization evidence reads from THEM; walls are corroboration only
+  * (they have moved ±2× run-to-run on identical code). Where AQE
+  * re-plans by stage-completion timing the counts move too (measured:
+  * dedup_clusters, pipeline_curate_full) — compare the set of states
+  * over repeated interleaved runs there. A query that throws reports
+  * `"status":"error"` and no time.
   *
   * Usage: Test/runMain graft.OptSweepProbe <out.jsonl> <plansDir>
   *          [dataDir] [q1,q2,...]
@@ -30,22 +33,7 @@ object OptSweepProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // per-job-group stage counter (TaskMetricsProbe counts tasks, not stages)
-    val stageGroups = TrieMap.empty[Int, String]
-    val stageCount = TrieMap.empty[String, Int]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val grp = if (e.properties == null) null
-          else e.properties.getProperty("spark.jobGroup.id")
-        if (grp != null) e.stageIds.foreach(stageGroups.put(_, grp))
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stageGroups.get(e.stageInfo.stageId).foreach(g =>
-          stageCount.updateWith(g) { case Some(n) => Some(n + 1); case None => Some(1) })
-    })
-    val probe = new graft.metrics.TaskMetricsProbe
-    spark.sparkContext.addSparkListener(probe)
+    val collector = JobGroupCollector.attach(spark)
 
     // warm the session the way Bench does
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -64,24 +52,20 @@ object OptSweepProbe {
       } catch { case e: Throwable =>
         System.err.println(s"[optsweep] $name explain failed: ${e.getMessage}")
       }
-      def once(label: String): Double = {
-        spark.sparkContext.setJobGroup(label, label, interruptOnCancel = false)
-        val t0 = System.nanoTime()
-        try fn(spark, dir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[optsweep] $name failed: ${e.getMessage}")
-        } finally spark.sparkContext.clearJobGroup()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(s"$name#warm")
-      val wall = once(name)
-      probe.quiesce(sc = spark.sparkContext)
-      val s = probe.snapshot(name).getOrElse(new graft.metrics.ResourceStats)
-      val stages = stageCount.getOrElse(name, 0)
-      w.println(f"""{"q":"$name","wall":$wall%.3f,"tasks":${s.tasks},"stages":$stages,"sw":${s.shuffleWriteBytes},"sr":${s.shuffleReadBytes},"in":${s.inputBytes},"spill":${s.memSpillBytes + s.diskSpillBytes},"peak":${s.peakTaskMemory}}""")
+      collector.run(s"$name#warm")(fn(spark, dir))
+      val r = collector.run(name)(fn(spark, dir))
+      r.error.foreach(e => System.err.println(s"[optsweep] $name failed: ${e.getMessage}"))
+      def num(x: Option[Double]): String = x.fold("null")(v => f"$v%.3f")
+      val s = r.totals
+      w.println(s"""{"q":"$name","status":"${r.status}","wall":${num(r.wallSec)},""" +
+        s""""construct_ms":${num(r.constructMs)},"exec_ms":${num(r.execMs)},""" +
+        s""""tasks":${s.tasks},"stages":${r.stages.size},"sw":${s.shuffleWriteBytes},""" +
+        s""""sr":${s.shuffleReadBytes},"in":${s.inputBytes},"spill":${s.spillBytes},""" +
+        s""""peak":${s.peakTaskMemory}}""")
       w.flush()
     }
     w.close()
+    collector.close()
     spark.stop()
   }
 }

@@ -66,12 +66,12 @@ class SpreadSuite extends SparkSuite {
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    new graft.metrics.TaskMetricsProbe().quiesce(sc = spark.sparkContext)
+    graft.metrics.JobGroupCollector.busDrained(spark.sparkContext, 10000)
     spark.sparkContext.addSparkListener(l)
     try {
       Tables.spreadFrame(joined)
       Tables.spreadFrame(shuffled)
-      new graft.metrics.TaskMetricsProbe().quiesce(sc = spark.sparkContext)
+      assert(graft.metrics.JobGroupCollector.busDrained(spark.sparkContext, 10000))
       assert(jobs.get() == 0, s"spreadFrame launched ${jobs.get()} jobs")
     } finally spark.sparkContext.removeSparkListener(l)
   }

@@ -288,8 +288,8 @@ class SeededQuantizerFaceSuite extends SparkSuite {
 
   test("multi-probe p>=2: ≡ flat when the winner is probed; HOF sim ≡ kernel bit-for-bit") {
     import spark.implicits._
-    // r19 advice (low): the p>=2 path was exercised only by the
-    // TwoLevelRecallProbe main; this is the DETERMINISTIC pin. Corpus
+    // the p>=2 path was otherwise exercised only by a one-off recall
+    // drive (docs/PLANS_r19.md); this is the DETERMINISTIC pin. Corpus
     // and quantizer are small enough for exact flat comparison.
     val n = 2500
     val dims = 8

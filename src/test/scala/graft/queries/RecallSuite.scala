@@ -183,7 +183,8 @@ class RecallSuite extends SparkSuite {
     // threshold itself — the r7 24×6 design measured 0.857 here and
     // 0.847 at sf0.1 (METRICS_r07), the r6 4×4 design 0.62. Pinned at
     // the measured value (0.97 at sf0.1, deterministic; 0.9716/0.9708
-    // at the ×10/×30 adaptive rungs by BandRawProbe) minus a thin
+    // at the ×10/×30 adaptive rungs vs exhaustive exact pairs,
+    // docs/PLANS_r19.md) minus a thin
     // guard — the r19 verdict's "recall must survive the
     // re-parameterization" contract, hardened from the old 0.9 floor.
     val recall = if (exact.isEmpty) 1.0 else (banded & exact).size.toDouble / exact.size
