@@ -132,11 +132,18 @@ object Bench {
     // two passes per query, report the min: pass 1 pays codegen compile
     // and page-cache warmup, pass 2 approximates steady-state throughput
     // (what a long-running cluster job sees). A pass that throws has no
-    // time: the query is listed under "failed", never timed.
+    // time: the query is listed under "failed", never timed. Every pass
+    // starts from an empty cache: a query that persists frames and never
+    // releases them (pipeline_curate_full's four boundaries) would
+    // otherwise time a partial cache hit in pass 2. Each pass's wall,
+    // task count and input bytes go to stderr, so a cache hit shows.
     val collector = JobGroupCollector.attach(spark)
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+      spark.catalog.clearCache()
       val r = collector.run(name)(fn(spark, sfDir))
       r.error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      System.err.println(s"[bench] $name pass: wall_s=${r.wallSec.fold("null")(v => f"$v%.3f")} " +
+        s"tasks=${r.totals.tasks} input_bytes=${r.totals.inputBytes}")
       r.wallSec
     }
     // SPARK_GRAFT_QUERIES=a,b,c restricts the run to a subset — for

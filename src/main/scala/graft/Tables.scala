@@ -114,7 +114,15 @@ object Tables {
     * re-planned, and under AQE eagerly EXECUTES upstream shuffle/broadcast
     * stages just to read a count — the curation pipeline passes
     * join-lineage frames through here. Estimation failure falls toward
-    * NO exchange (the at-scale-safe direction, as in [[spread]]). */
+    * NO exchange (the at-scale-safe direction, as in [[spread]]).
+    *
+    * Known blind spots of the estimate: leaves it does not match — an
+    * `InMemoryRelation` (a persisted frame), a `LocalRelation` or a
+    * `Range` — contribute no width, so a frame built only on them reads
+    * as width 1 and always gets the 2×-cores repartition, even when it
+    * is already wide. And the estimate is the WIDEST match anywhere in
+    * the plan, so a narrowing coalesce above a wide scan is ignored and
+    * the frame is left unspread. */
   def spreadFrame(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
     val spark = df.sparkSession

@@ -71,6 +71,84 @@ object Similarity {
     if (presentationSort) flat.orderBy("query_id", "rank") else flat
   }
 
+  /** Exact float-cosine re-rank of a (query_id, neighbor_id) shortlist —
+    * the ONE refinement stage of every quantized ANN face (int8, PQ,
+    * IVF-PQ, residual IVF-PQ, 1-bit) and of [[IvfIndex.probePq]]:
+    * k-sized float reads, shortlist-sized windows, ties broken on
+    * neighbor_id, cut to `k`, sim rounded to 4 digits. The shortlist
+    * join runs FIRST and the norms after: the O(Dim) float folds run for
+    * the ~NumQueries·shortK surviving rows only — joining below a
+    * corpus-wide norm projection would norm every row (Catalyst can't
+    * push a join under a projection it depends on). [[exactRerankSql]]
+    * is the DuckDB twin. */
+  private[operators] def exactRerankOf(
+      emb: DataFrame, shortlist: DataFrame, k: Int = TopK): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val fe = emb.select(col("vec_id"), col("embedding"))
+    val qe = fe.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
+    fe.withColumnRenamed("vec_id", "neighbor_id")
+      .join(broadcast(shortlist), "neighbor_id")
+      .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
+      .join(broadcast(qe), "query_id")
+      .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col("sim"), 4).as("sim"))
+      .orderBy("query_id", "rank")
+  }
+
+  /** `name AS (...)`: (vec_id, embedding, `norm` = ‖embedding‖) over the
+    * embeddings table — the normed-corpus CTE the exact-cosine twins
+    * start from. */
+  private def normedSql(name: String, materialized: Boolean = false,
+      norm: String = "nrm"): String =
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+      |  SELECT vec_id, embedding,
+      |         SQRT(${dotSql("embedding", "embedding")}) AS $norm
+      |  FROM embeddings)""".stripMargin
+
+  /** DuckDB twin of the per-query top-k cut ([[topKPerQuery]],
+    * [[exactRerankOf]]): `ranked` over `src(query_id, neighbor_id, sim)`
+    * and the final SELECT of the top [[TopK]] per query, ties broken on
+    * neighbor_id, sim rounded to 4 digits. Ends the statement. */
+  private def topKTailSql(src: String): String =
+    s"""ranked AS (
+      |  SELECT query_id, neighbor_id, sim,
+      |         row_number() OVER (PARTITION BY query_id
+      |                            ORDER BY sim DESC, neighbor_id) AS rank
+      |  FROM $src)
+      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
+      |       ROUND(sim, 4) AS sim
+      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin
+
+  /** DuckDB twin of a shortlist → [[exactRerankOf]] query: `short` keeps
+    * the top `shortK` rows of `scored(query_id, neighbor_id, sim)` per
+    * query, `exact` re-scores them with float cosine against the normed
+    * CTE `fe` ([[normedSql]], defined by the caller), and
+    * [[topKTailSql]] cuts to [[TopK]]. Ends the statement. */
+  private def exactRerankSql(scored: String, shortK: Int): String =
+    s"""short AS (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT query_id, neighbor_id,
+      |           row_number() OVER (PARTITION BY query_id
+      |                              ORDER BY sim DESC, neighbor_id) AS srn
+      |    FROM $scored)
+      |  WHERE srn <= $shortK),
+      |qe AS (
+      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM fe
+      |  WHERE vec_id < $NumQueries),
+      |exact AS (
+      |  SELECT sh.query_id, sh.neighbor_id,
+      |         (${dotSql("qe.qv", "nb.embedding")}) / (qe.qnrm * nb.nrm) AS sim
+      |  FROM short sh
+      |  JOIN fe nb ON sh.neighbor_id = nb.vec_id
+      |  JOIN qe ON sh.query_id = qe.query_id),
+      |${topKTailSql("exact")}""".stripMargin
+
   private val annCosineTopk = QueryDef(
     (s, dir) => {
       // single-file input = one partition; spread the O(Dim) per-row math.
@@ -98,14 +176,7 @@ object Similarity {
       |  SELECT query_id, vec_id AS neighbor_id,
       |         (${dotSql("q", "v")}) / (q_norm * v_norm) AS sim
       |  FROM queries, corpus WHERE vec_id <> query_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${topKTailSql("scored")}""".stripMargin))
 
   private val NumPlanes = 16
 
@@ -576,10 +647,7 @@ object Similarity {
   /** SQL twin of [[embeddingCosinePairs]] — reused (as a subquery) by the
     * cluster oracle. */
   private[operators] val embeddingCosinePairsSql: String =
-    s"""WITH e AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS norm
-      |  FROM embeddings),
+    s"""WITH ${normedSql("e", norm = "norm")},
       |$bandCodesSqlCtes,
       |cand AS (
       |  SELECT DISTINCT a.vec_id AS vec_id_keeper, b.vec_id AS vec_id_dropped
@@ -995,14 +1063,7 @@ object Similarity {
       |          SQRT(${dotSql("a.embedding", "a.embedding")})) AS sim
       |  FROM queries qu JOIN assigned a
       |    ON qu.cell = a.cell AND a.vec_id <> qu.query_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${topKTailSql("scored")}""".stripMargin))
 
   /** IVF with TRAINED centroids and multi-cell probing: `KmeansIters`
     * Lloyd iterations from the deterministic seed (first `NumCentroids`
@@ -1104,10 +1165,7 @@ object Similarity {
         s"t$i AS (\n  SELECT cent_id, cvec, SQRT(${dotSql("cvec", "cvec")}) AS cnrm\n" +
         s"  FROM t${i}m)"
       }.mkString(",\n")
-      s"""WITH e AS (
-  SELECT vec_id, embedding,
-         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-  FROM embeddings),
+      s"""WITH ${normedSql("e")},
 ts AS (
   SELECT * FROM e WHERE vec_id < $TrainCap),
 seeds AS (
@@ -1132,14 +1190,7 @@ scored AS (
          (${dotSql("p.q", "a.embedding")}) / (p.qnrm * a.nrm) AS sim
   FROM probes p JOIN assigned a
     ON p.cell = a.cell AND a.vec_id <> p.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       ROUND(sim, 4) AS sim
-FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
+${topKTailSql("scored")}"""
     })
 
   // ---- int8-quantized brute-force top-k --------------------------------
@@ -1222,14 +1273,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
   private val annInt8Topk = QueryDef(
     (s, dir) => topKPerQuery(s, int8Scored(s, dir)),
     Some(s"""WITH $int8ScoredSql,
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scoredq)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${topKTailSql("scoredq")}""".stripMargin))
 
   /** Shortlist depth of the re-rank stage: 3× the final k. */
   private val ShortK = 30
@@ -1245,60 +1289,13 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * not corpus-sized, so no reducer funnels. */
   private val annInt8RerankTopk = QueryDef(
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val shortlist = topKPerQuery(s, int8Scored(s, dir), ShortK)
         .select("query_id", "neighbor_id")
-      // shortlist join FIRST, norms after: the O(Dim) float folds run
-      // for the ~NumQueries·ShortK surviving rows only — joining below
-      // a corpus-wide norm projection would norm every row (Catalyst
-      // can't push a join under a projection it depends on)
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val qe = emb.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
-      val exact = emb
-        .withColumnRenamed("vec_id", "neighbor_id")
-        .join(broadcast(shortlist), "neighbor_id")
-        .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-        .join(broadcast(qe), "query_id")
-        .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
     Some(s"""WITH $int8ScoredSql,
-      |short AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |           row_number() OVER (PARTITION BY query_id
-      |                              ORDER BY sim DESC, neighbor_id) AS srn
-      |    FROM scoredq)
-      |  WHERE srn <= $ShortK),
-      |e AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
-      |qe AS (
-      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM e
-      |  WHERE vec_id < $NumQueries),
-      |exact AS (
-      |  SELECT sh.query_id, sh.neighbor_id,
-      |         (${dotSql("qe.qv", "ne.embedding")}) / (qe.qnrm * ne.nrm) AS sim
-      |  FROM short sh
-      |  JOIN e ne ON sh.neighbor_id = ne.vec_id
-      |  JOIN qe ON sh.query_id = qe.query_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM exact)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${normedSql("fe")},
+      |${exactRerankSql("scoredq", ShortK)}""".stripMargin))
 
   // ---- product-quantized ANN (codes + ADC) -----------------------------
 
@@ -1321,21 +1318,24 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
   private[operators] val PqShortK = 200
 
   /** Books are pure driver-side metadata derived deterministically from
-    * the dir's embeddings — ONE training per (session, dir) serves every
-    * PQ face (the three PQ queries would otherwise re-run identical
-    * Lloyd jobs), which is also the production reality: books train
-    * once, queries reuse them. Same lazy-holder/putIfAbsent concurrency
-    * shape as the incremental-dedup catalog memo; stopped-session keys
-    * sweep on lookup. */
+    * the dir's embeddings — ONE training per (session, dir, family)
+    * serves every PQ face (the PQ queries would otherwise re-run
+    * identical Lloyd jobs), which is also the production reality: books
+    * train once, queries reuse them. `residual = false` trains on the
+    * normalized vectors `nx`; `residual = true` runs the identical Lloyd
+    * arithmetic over the residuals `rx` ([[pqResidualFrame]]). Same
+    * lazy-holder/putIfAbsent concurrency shape as the incremental-dedup
+    * catalog memo; stopped-session keys sweep on lookup. */
   private final class LazyBooks(build: () => Seq[Seq[SubCentroid]]) {
     lazy val value: Seq[Seq[SubCentroid]] = build()
   }
   private val pqBooksMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), LazyBooks]
-  private def pqBooksFor(s: SparkSession, dir: String): Seq[Seq[SubCentroid]] = {
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Boolean), LazyBooks]
+  private def pqBooksFor(s: SparkSession, dir: String, residual: Boolean): Seq[Seq[SubCentroid]] = {
     pqBooksMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqBooksMemo.remove)
-    pqBooksMemo.getOrElseUpdate((s, dir),
-      new LazyBooks(() => pqTrainBooks(pqNormalized(s, dir)))).value
+    pqBooksMemo.getOrElseUpdate((s, dir, residual), new LazyBooks(() => pqTrainBooks(
+      if (residual) pqResidualFrame(s, dir)._1.select(col("vec_id"), col("rx").as("nx"))
+      else pqNormalized(s, dir)))).value
   }
 
   /** One subspace codeword. Field names are what the encode fold reads. */
@@ -1484,7 +1484,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
 
   private def pqScored(s: SparkSession, dir: String): DataFrame = {
     val emb = pqNormalized(s, dir)
-    val books = pqBooksFor(s, dir)
+    val books = pqBooksFor(s, dir, residual = false)
     val corpus = pqWithRecon(emb, books)
       .select(col("vec_id").as("neighbor_id"), col("recon"))
     val queries = emb.filter(col("vec_id") < NumQueries)
@@ -1571,14 +1571,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
   private val annPqTopk = QueryDef(
     (s, dir) => topKPerQuery(s, pqScored(s, dir)),
     Some(s"""WITH ${pqScoredSql},
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scoredp)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${topKTailSql("scoredp")}""".stripMargin))
 
   /** PQ shortlist + exact float re-rank — the [[annInt8RerankTopk]]
     * production shape over the 32×-compressed codes: the corpus is
@@ -1586,56 +1579,13 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * re-scored with exact float cosine. */
   private val annPqRerankTopk = QueryDef(
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val shortlist = topKPerQuery(s, pqScored(s, dir), PqShortK)
         .select("query_id", "neighbor_id")
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val qe = emb.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
-      val exact = emb
-        .withColumnRenamed("vec_id", "neighbor_id")
-        .join(broadcast(shortlist), "neighbor_id")
-        .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-        .join(broadcast(qe), "query_id")
-        .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
     Some(s"""WITH ${pqScoredSql},
-      |short AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |           row_number() OVER (PARTITION BY query_id
-      |                              ORDER BY sim DESC, neighbor_id) AS srn
-      |    FROM scoredp)
-      |  WHERE srn <= $PqShortK),
-      |fe AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
-      |fqe AS (
-      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM fe
-      |  WHERE vec_id < $NumQueries),
-      |exact AS (
-      |  SELECT sh.query_id, sh.neighbor_id,
-      |         (${dotSql("fqe.qv", "ne2.embedding")}) / (fqe.qnrm * ne2.nrm) AS sim
-      |  FROM short sh
-      |  JOIN fe ne2 ON sh.neighbor_id = ne2.vec_id
-      |  JOIN fqe ON sh.query_id = fqe.query_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM exact)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${normedSql("fe")},
+      |${exactRerankSql("scoredp", PqShortK)}""".stripMargin))
 
   /** IVF-PQ — the production 100 TB ANN composition (the FAISS
     * IndexIVFPQ shape), assembled from the two verified pieces: the
@@ -1651,71 +1601,39 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * driver by the exact fold replica ([[nearestCentroidLocal]], the
     * kmeans-query pattern ≡ the twin's `ORDER BY csim DESC, cent_id`
     * window). */
-  private val annIvfPqTopk = QueryDef(
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val emb = pqNormalized(s, dir)
-      val books = pqBooksFor(s, dir)
-      val cents = collectCentroids(emb.filter(col("vec_id") < NumCentroids)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"),
-          col("nrm").as("cnrm")))
-      // corpus: cell assignment (zero-shuffle literal fold) + PQ codes;
-      // nx is RECOMPUTED narrowly after assignment (same expression on
-      // the same embedding/nrm doubles ⇒ identical values) — joining the
-      // normalized frame back by vec_id would be a corpus self-join
-      val corpus = pqWithRecon(
-          assignCells(emb.select("vec_id", "embedding", "nrm"), cents)
-            .withColumn("nx",
-              expr("transform(embedding, x -> cast(x as double) / nrm)")),
-          books)
-        .select(col("vec_id").as("neighbor_id"), col("cell"), col("recon"))
-      // driver-side probes: 2 nearest cells per query, exact fold replica
-      val qhead = emb.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("nx"))
-        .collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2),
-          r.getSeq[Double](3)))
-        .sortBy(_._1)
-      val probeRows = qhead.flatMap { case (qid, q, qnrm, qx) =>
-        val p1 = nearestCentroidLocal(q, qnrm, cents)
-        val p2 = nearestCentroidLocal(q, qnrm, cents, exclude = p1)
-        Seq((qid, qx, p1), (qid, qx, p2))
-      }
-      import s.implicits._
-      val probes = probeRows.toDF("query_id", "qx", "cell")
-      val shortlist = topKPerQuery(s,
-        broadcast(probes)
-          .join(corpus, Seq("cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("sim", dotCol("qx", "recon")),
-        PqShortK)
-        .select("query_id", "neighbor_id")
-      // exact float re-rank of the shortlist (the int8/PQ rerank tail)
-      val fe = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val qe = fe.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
-      fe.withColumnRenamed("vec_id", "neighbor_id")
-        .join(broadcast(shortlist), "neighbor_id")
-        .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-        .join(broadcast(qe), "query_id")
-        .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
-    },
-    Some(s"""WITH $pqReconSqlCtes,
-      |fe AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
-      |icents AS (
+  /** The nprobe=2 probe frame of both IVF-PQ faces, computed on the
+    * driver from the normalized frame `emb` ([[pqNormalizedOf]]): per
+    * query vector, its two nearest seeded `cents` by the exact fold
+    * replica ([[nearestCentroidLocal]], the second probe excluding the
+    * first's winner) ≡ the twin's `iprobes` window ([[ivfCellsSql]]).
+    * Rows (query_id, qx, cell). */
+  private def twoCellProbes(s: SparkSession, emb: DataFrame, cents: Seq[Centroid]): DataFrame = {
+    val qhead = emb.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("nx"))
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2),
+        r.getSeq[Double](3)))
+      .sortBy(_._1)
+    val probeRows = qhead.flatMap { case (qid, q, qnrm, qx) =>
+      val p1 = nearestCentroidLocal(q, qnrm, cents)
+      val p2 = nearestCentroidLocal(q, qnrm, cents, exclude = p1)
+      Seq((qid, qx, p1), (qid, qx, p2))
+    }
+    import s.implicits._
+    probeRows.toDF("query_id", "qx", "cell")
+  }
+
+  /** DuckDB twin of the seeded coarse quantizer both IVF-PQ faces probe,
+    * over the normed CTE `fe` ([[normedSql]]): `icents` (the first
+    * [[NumCentroids]] vectors), `iassigned(vec_id, cell)` and
+    * `iprobes(query_id, cell)`, the two nearest cells per query
+    * ([[twoCellProbes]]). `materialized` marks icents and iassigned. */
+  private def ivfCellsSql(materialized: Boolean): String = {
+    val mat = if (materialized) " MATERIALIZED" else ""
+    s"""icents AS$mat (
       |  SELECT vec_id AS cent_id, embedding AS cvec, nrm AS cnrm FROM fe
       |  WHERE vec_id < $NumCentroids),
-      |iassigned AS (
+      |iassigned AS$mat (
       |  SELECT vec_id, cell FROM (
       |    SELECT e.vec_id, c.cent_id AS cell,
       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
@@ -1730,7 +1648,38 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
       |             (${dotSql("e.embedding", "c.cvec")}) / (e.nrm * c.cnrm) DESC,
       |             c.cent_id) AS prn
       |    FROM fe e, icents c WHERE e.vec_id < $NumQueries)
-      |  WHERE prn <= 2),
+      |  WHERE prn <= 2)""".stripMargin
+  }
+
+  private val annIvfPqTopk = QueryDef(
+    (s, dir) => {
+      val emb = pqNormalized(s, dir)
+      val books = pqBooksFor(s, dir, residual = false)
+      val cents = collectCentroids(emb.filter(col("vec_id") < NumCentroids)
+        .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"),
+          col("nrm").as("cnrm")))
+      // corpus: cell assignment (zero-shuffle literal fold) + PQ codes;
+      // nx is RECOMPUTED narrowly after assignment (same expression on
+      // the same embedding/nrm doubles ⇒ identical values) — joining the
+      // normalized frame back by vec_id would be a corpus self-join
+      val corpus = pqWithRecon(
+          assignCells(emb.select("vec_id", "embedding", "nrm"), cents)
+            .withColumn("nx",
+              expr("transform(embedding, x -> cast(x as double) / nrm)")),
+          books)
+        .select(col("vec_id").as("neighbor_id"), col("cell"), col("recon"))
+      val shortlist = topKPerQuery(s,
+        broadcast(twoCellProbes(s, emb, cents))
+          .join(corpus, Seq("cell"))
+          .filter(col("neighbor_id") =!= col("query_id"))
+          .withColumn("sim", dotCol("qx", "recon")),
+        PqShortK)
+        .select("query_id", "neighbor_id")
+      exactRerankOf(Tables.embeddings(s, dir), shortlist)
+    },
+    Some(s"""WITH $pqReconSqlCtes,
+      |${normedSql("fe")},
+      |${ivfCellsSql(materialized = false)},
       |iscored AS (
       |  SELECT p.query_id, a.vec_id AS neighbor_id,
       |         (${dotSql("q.nx", "r.recon")}) AS sim
@@ -1738,30 +1687,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
       |  JOIN iassigned a ON a.cell = p.cell AND a.vec_id <> p.query_id
       |  JOIN precon r ON r.vec_id = a.vec_id
       |  JOIN ne q ON q.vec_id = p.query_id),
-      |ishort AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |           row_number() OVER (PARTITION BY query_id
-      |                              ORDER BY sim DESC, neighbor_id) AS srn
-      |    FROM iscored)
-      |  WHERE srn <= $PqShortK),
-      |iqe AS (
-      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM fe
-      |  WHERE vec_id < $NumQueries),
-      |iexact AS (
-      |  SELECT sh.query_id, sh.neighbor_id,
-      |         (${dotSql("iqe.qv", "ne2.embedding")}) / (iqe.qnrm * ne2.nrm) AS sim
-      |  FROM ishort sh
-      |  JOIN fe ne2 ON sh.neighbor_id = ne2.vec_id
-      |  JOIN iqe ON sh.query_id = iqe.query_id),
-      |iranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM iexact)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM iranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${exactRerankSql("iscored", PqShortK)}""".stripMargin))
 
   // ---- residual-coded IVF-PQ -------------------------------------------
 
@@ -1795,44 +1721,6 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
   private[operators] def pqResidualFrame(s: SparkSession, dir: String): (DataFrame, Seq[Centroid]) =
     pqResidualFrameOf(Tables.embeddingsSpread(s, dir))
 
-  /** Residual codebooks — [[pqTrainBooks]] run over `rx` instead of `nx`
-    * (identical Lloyd arithmetic on a different vector family), memoized
-    * per (session, dir) like [[pqBooksFor]]. */
-  private val pqResBooksMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), LazyBooks]
-  private[operators] def pqResBooksFor(s: SparkSession, dir: String): Seq[Seq[SubCentroid]] = {
-    pqResBooksMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqResBooksMemo.remove)
-    pqResBooksMemo.getOrElseUpdate((s, dir),
-      new LazyBooks(() => pqTrainBooks(
-        pqResidualFrame(s, dir)._1.select(col("vec_id"), col("rx").as("nx"))))).value
-  }
-
-  /** Exact float-cosine re-rank of a (query_id, neighbor_id) shortlist —
-    * the shared tail of the quantized ANN faces: k-sized float reads,
-    * shortlist-sized windows. */
-  private[operators] def exactRerankOf(
-      emb: DataFrame, shortlist: DataFrame, k: Int = TopK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fe = emb.select(col("vec_id"), col("embedding"))
-    val qe = fe.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
-    fe.withColumnRenamed("vec_id", "neighbor_id")
-      .join(broadcast(shortlist), "neighbor_id")
-      .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-      .join(broadcast(qe), "query_id")
-      .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-      .orderBy("query_id", "rank")
-  }
-
-  private[operators] def exactRerank(s: SparkSession, dir: String, shortlist: DataFrame): DataFrame =
-    exactRerankOf(Tables.embeddings(s, dir), shortlist)
-
   /** IVF-PQ over RESIDUALS — the full FAISS IndexIVFPQ recipe (Jégou et
     * al. 2011 §IV): codes quantize `nx − ĉ_cell` (the vector minus its
     * unit-norm coarse centroid) with ONE shared residual book, closing
@@ -1849,31 +1737,18 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
   private val annIvfPqResidualTopk = QueryDef(
     (s, dir) => {
       val (resFrame, cents) = pqResidualFrame(s, dir)
-      val books = pqResBooksFor(s, dir)
+      val books = pqBooksFor(s, dir, residual = true)
       val corpus = pqWithRecon(resFrame.withColumn("nx", col("rx")), books)
         .withColumn("fullrecon", zip_with(col("ncv"), col("recon"), (a, b) => a + b))
         .select(col("vec_id").as("neighbor_id"), col("cell"), col("fullrecon"))
-      val qhead = pqNormalized(s, dir).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("nx"))
-        .collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2),
-          r.getSeq[Double](3)))
-        .sortBy(_._1)
-      val probeRows = qhead.flatMap { case (qid, q, qnrm, qx) =>
-        val p1 = nearestCentroidLocal(q, qnrm, cents)
-        val p2 = nearestCentroidLocal(q, qnrm, cents, exclude = p1)
-        Seq((qid, qx, p1), (qid, qx, p2))
-      }
-      import s.implicits._
-      val probes = probeRows.toDF("query_id", "qx", "cell")
       val shortlist = topKPerQuery(s,
-        broadcast(probes)
+        broadcast(twoCellProbes(s, pqNormalized(s, dir), cents))
           .join(corpus, Seq("cell"))
           .filter(col("neighbor_id") =!= col("query_id"))
           .withColumn("sim", dotCol("qx", "fullrecon")),
         PqShortK)
         .select("query_id", "neighbor_id")
-      exactRerank(s, dir, shortlist)
+      exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
     // MATERIALIZED throughout: ne/fe/icents/rxc are each referenced from
     // several downstream CTEs — inlined (DuckDB's default) the whole
@@ -1885,21 +1760,8 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
       |         list_transform(embedding, x -> CAST(x AS DOUBLE) /
       |           SQRT(${dotSql("embedding", "embedding")})) AS nx
       |  FROM embeddings),
-      |fe AS MATERIALIZED (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
-      |icents AS MATERIALIZED (
-      |  SELECT vec_id AS cent_id, embedding AS cvec, nrm AS cnrm FROM fe
-      |  WHERE vec_id < $NumCentroids),
-      |iassigned AS MATERIALIZED (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT e.vec_id, c.cent_id AS cell,
-      |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |             (${dotSql("e.embedding", "c.cvec")}) / (e.nrm * c.cnrm) DESC,
-      |             c.cent_id) AS arn
-      |    FROM fe e, icents c)
-      |  WHERE arn = 1),
+      |${normedSql("fe", materialized = true)},
+      |${ivfCellsSql(materialized = true)},
       |rxc AS MATERIALIZED (
       |  SELECT a.vec_id, a.cell,
       |         list_transform(range(1, ${Dim + 1}),
@@ -1915,44 +1777,13 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
       |         list_transform(range(1, ${Dim + 1}),
       |           i -> x.ncv[i] + rr.recon[i]) AS recon
       |  FROM rrecon rr JOIN rxc x ON x.vec_id = rr.vec_id),
-      |iprobes AS (
-      |  SELECT query_id, cell FROM (
-      |    SELECT e.vec_id AS query_id, c.cent_id AS cell,
-      |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |             (${dotSql("e.embedding", "c.cvec")}) / (e.nrm * c.cnrm) DESC,
-      |             c.cent_id) AS prn
-      |    FROM fe e, icents c WHERE e.vec_id < $NumQueries)
-      |  WHERE prn <= 2),
       |iscored AS (
       |  SELECT p.query_id, r.vec_id AS neighbor_id,
       |         (${dotSql("q.nx", "r.recon")}) AS sim
       |  FROM iprobes p
       |  JOIN rfull r ON r.cell = p.cell AND r.vec_id <> p.query_id
       |  JOIN ne q ON q.vec_id = p.query_id),
-      |ishort AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |           row_number() OVER (PARTITION BY query_id
-      |                              ORDER BY sim DESC, neighbor_id) AS srn
-      |    FROM iscored)
-      |  WHERE srn <= $PqShortK),
-      |iqe AS (
-      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM fe
-      |  WHERE vec_id < $NumQueries),
-      |iexact AS (
-      |  SELECT sh.query_id, sh.neighbor_id,
-      |         (${dotSql("iqe.qv", "ne2.embedding")}) / (iqe.qnrm * ne2.nrm) AS sim
-      |  FROM ishort sh
-      |  JOIN fe ne2 ON sh.neighbor_id = ne2.vec_id
-      |  JOIN iqe ON sh.query_id = iqe.query_id),
-      |iranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM iexact)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM iranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${exactRerankSql("iscored", PqShortK)}""".stripMargin))
 
   // ---- semantic dedup (cluster-then-prune) -----------------------------
 
@@ -2055,10 +1886,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * is the SQL [[adaptiveNlistSql]] twin of [[adaptiveNlist]] — same
     * `count(*)`-derived value on both engines. */
   private def seededAssignSql: String =
-    s"""e AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
+    s"""${normedSql("e")},
       |cents AS (
       |  SELECT vec_id AS cent_id, embedding AS cvec, nrm AS cnrm FROM e
       |  WHERE vec_id < $adaptiveNlistSql),
@@ -2466,56 +2294,13 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * METRICS next to the single-stage number. */
   private val annHammingRerankTopk = QueryDef(
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val shortlist = topKPerQuery(s, hammingScored(s, dir), HamShortK)
         .select("query_id", "neighbor_id")
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val qe = emb.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .withColumn("qnrm", sqrt(dotCol("qv", "qv")))
-      val exact = emb
-        .withColumnRenamed("vec_id", "neighbor_id")
-        .join(broadcast(shortlist), "neighbor_id")
-        .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-        .join(broadcast(qe), "query_id")
-        .withColumn("sim", dotCol("qv", "embedding") / (col("qnrm") * col("nrm")))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
     Some(s"""WITH $hammingScoredSql,
-      |short AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |           row_number() OVER (PARTITION BY query_id
-      |                              ORDER BY sim DESC, neighbor_id) AS rank
-      |    FROM scoredh)
-      |  WHERE rank <= $HamShortK),
-      |he AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
-      |hqe AS (
-      |  SELECT vec_id AS query_id, embedding AS qv, nrm AS qnrm FROM he
-      |  WHERE vec_id < $NumQueries),
-      |hexact AS (
-      |  SELECT sh.query_id, sh.neighbor_id,
-      |         (${dotSql("hqe.qv", "ne.embedding")}) / (hqe.qnrm * ne.nrm) AS sim
-      |  FROM short sh
-      |  JOIN he ne ON sh.neighbor_id = ne.vec_id
-      |  JOIN hqe ON sh.query_id = hqe.query_id),
-      |hranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM hexact)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM hranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${normedSql("fe")},
+      |${exactRerankSql("scoredh", HamShortK)}""".stripMargin))
 
   // ---- cluster-coverage diversity sampling ----------------------------
 
@@ -2710,14 +2495,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
       |scored AS (
       |  SELECT query_id, neighbor_id, (${dotSql("q", "v")}) AS sim
       |  FROM queries, corpus WHERE neighbor_id <> query_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, sim,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-      |       ROUND(sim, 4) AS sim
-      |FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin))
+      |${topKTailSql("scored")}""".stripMargin))
 
   /** Cosine threshold for [[decontaminateEmbedding]]. Fixture-tuned the
     * [[RangeTau]] way: the synthetic embeddings are near-orthogonal, so
@@ -2779,10 +2557,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
     * return ZERO rows — the twin's corpus would silently go empty while
     * the Spark left_anti keeps all non-matching rows (r18 advice). */
   private[operators] val semContamSqlCtes: String =
-    s"""sce AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
+    s"""${normedSql("sce")},
       |scbids AS (SELECT doc_id FROM documents WHERE doc_id % 97 = 0),
       |scb AS (SELECT vec_id, embedding AS q, nrm AS qn
       |        FROM sce WHERE vec_id IN (SELECT doc_id FROM scbids)),
@@ -2804,10 +2579,7 @@ FROM ranked WHERE rank <= $TopK ORDER BY query_id, rank"""
           round(col("sim"), 4).as("sim"))
         .orderBy("vec_id", "bench_vec_id")
     },
-    Some(s"""WITH e AS (
-      |  SELECT vec_id, embedding,
-      |         SQRT(${dotSql("embedding", "embedding")}) AS nrm
-      |  FROM embeddings),
+    Some(s"""WITH ${normedSql("e")},
       |bench AS (
       |  SELECT vec_id AS bench_vec_id, embedding AS q, nrm AS qn
       |  FROM e WHERE vec_id % 97 = 0),

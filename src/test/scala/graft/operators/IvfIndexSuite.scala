@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The persisted IVF index: build-once/probe-many lifecycle, probe
   * correctness against a driver-side exact replica over the PERSISTED
   * assignment, and the partition-pruning contract (a probe's scan reads
-  * only its nprobe cells' files). */
+  * only its nprobe cells' files), plus the exact re-rank tail its probes
+  * share with the quantized ANN queries (`Similarity.exactRerankOf`). */
 class IvfIndexSuite extends SparkSuite {
 
   private def withIndex[A](f: String => A): A = {
@@ -259,5 +260,23 @@ class IvfIndexSuite extends SparkSuite {
       val b = IvfIndex.probe(spark, path, q2, nprobe = 1, topk = 3).count()
       assert(a === 3 && b === 3)
     }
+  }
+
+  test("exactRerankOf: cosine ties rank by neighbor_id, cut to k, shortlist-only") {
+    // the ONE re-rank tail of the quantized ANN queries and of probe():
+    // 10 and 11 both score exactly 1.0 against query 0 (listed 11 first),
+    // 12 and 13 tie at 1/sqrt(2) for the last slot, and 14 — also 1.0 —
+    // is in the corpus but not in the shortlist
+    import spark.implicits._
+    val emb = Seq(
+      0L -> Seq(1f, 0f, 0f), 1L -> Seq(0f, 1f, 0f),
+      10L -> Seq(2f, 0f, 0f), 11L -> Seq(3f, 0f, 0f), 12L -> Seq(1f, 1f, 0f),
+      13L -> Seq(1f, 0f, 1f), 14L -> Seq(5f, 0f, 0f)).toDF("vec_id", "embedding")
+    val shortlist = Seq(0L -> 11L, 0L -> 10L, 0L -> 13L, 0L -> 12L, 1L -> 12L, 1L -> 10L)
+      .toDF("query_id", "neighbor_id")
+    val got = Similarity.exactRerankOf(emb, shortlist, k = 3).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(got === Seq((0L, 1, 10L, 1.0), (0L, 2, 11L, 1.0), (0L, 3, 12L, 0.7071),
+      (1L, 1, 12L, 0.7071), (1L, 2, 10L, 0.0)))
   }
 }
