@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -475,21 +475,12 @@ object Dedup {
   /** Signature-row count (docs with non-NULL text), ONE action per
     * (session, dir, corpus mtime) — the rung-sizing metadata for the
     * simhash ladder, the [[graft.operators.Similarity.embeddingsCountFor]]
-    * discipline (incl. the mtime invalidation: a rewritten corpus
-    * re-counts, so the Spark rung and the twin's count(*) agree). */
-  private final class LazyCount(build: () => Long) {
-    lazy val value: Long = build()
-  }
-  private val docsCountMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Long), LazyCount]
-  private[graft] def documentsCountFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): Long = {
+    * discipline (incl. the mtime key: a rewritten corpus re-counts, so
+    * the Spark rung and the twin's count(*) agree). */
+  private[graft] def documentsCountFor(s: SparkSession, dir: String): Long = {
     val snap = new java.io.File(s"$dir/documents.parquet").lastModified()
-    docsCountMemo.keys.filter(k =>
-      k._1.sparkContext.isStopped || (k._2 == dir && k._3 != snap))
-      .foreach(docsCountMemo.remove)
-    docsCountMemo.getOrElseUpdate((s, dir, snap), new LazyCount(() =>
-      Tables.documents(s, dir).filter(col("text").isNotNull).count())).value
+    FixtureStore.perSession(s, ("docs_count", dir, snap))(
+      Tables.documents(s, dir).filter(col("text").isNotNull).count())
   }
 
   /** SQL twin of [[simhashPairs]] — reused (as a subquery) by the
@@ -630,7 +621,7 @@ object Dedup {
     * unchanged. */
   private def storedClusterEdges(
       s: SparkSession, dir: String): DataFrame = {
-    val path = FixtureStore.ensure("clusterpairs", dir) { p =>
+    val path = FixtureStore.onDisk("clusterpairs", dir) { p =>
       clusterEdges(s, dir).write.mode("overwrite").parquet(s"$p/pairs")
     }
     s.read.parquet(s"$path/pairs")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -476,58 +476,28 @@ object IncrementalDedup {
   // One catalog fixture per (session, sfDir): table names are
   // session-scoped, so the memo must be too — a second SparkSession
   // reusing a first session's memoized name would get table-not-found.
-  // The slug is md5 hex of the dir (collision-free, unlike hashCode: two
-  // dirs colliding on hashCode would reuse one table name and the second
-  // saveAsTable would fail ErrorIfExists) plus a per-build counter, and
-  // the path carries the pid, so neither concurrent JVMs nor two
-  // sessions over the same dir ever share files or names.
-  // Concurrent THREADS memoize per key through a lazy holder: racing
-  // misses may create two holders (side-effect free), putIfAbsent picks
-  // one winner, and only the winner's `value` ever runs the build — so
-  // the catalog write runs exactly once per key WITHOUT a global lock
-  // that would convoy unrelated dirs behind one dir's Spark write. A
-  // failed build leaves the lazy uninitialized and is retried on the
-  // next call. The DuckDB oracle recomputes the catalog from
-  // `documents` directly (it never reads these files), so the fixture
-  // can die with the JVM — a shutdown hook reclaims it.
-  private final class LazyCatalog(build: () => String) {
-    lazy val value: String = build()
-  }
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), LazyCatalog]
+  // Each session's build writes its own on-disk artifact (the key
+  // carries a per-build counter) and names the table after the
+  // artifact dir, so neither concurrent JVMs nor two sessions over the
+  // same dir ever share files or names. Both memos live in
+  // [[FixtureStore]]. The DuckDB oracle recomputes the catalog from
+  // `documents` directly (it never reads these files).
   private val buildSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // Session-keyed memos would otherwise pin every stopped session (and
-  // its bloom bytes) for the JVM's life; sweep dead-context entries on
-  // each lookup. Sessions sharing a still-live SparkContext are kept —
-  // cheap (name string / KB-class bytes) and bounded by live usage.
-  private def sweepStopped(): Unit = {
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    blooms.keys.filter(_._1.sparkContext.isStopped).foreach(blooms.remove)
-  }
+  /** Historical catalog (even doc_ids of `dir`) written by `write` under
+    * a fresh `graft_<tag>_…` artifact; returns the table name. */
+  private def sessionCatalog(s: SparkSession, tag: String, dir: String)(
+      write: (DataFrame, String, String) => String): String =
+    FixtureStore.perSession(s, (tag, dir)) {
+      val path = FixtureStore.onDisk(tag, s"$dir#${buildSeq.incrementAndGet()}") { p =>
+        write(Tables.documents(s, dir).filter(col("doc_id") % 2 === 0), p,
+          new java.io.File(p).getName): Unit
+      }
+      new java.io.File(path).getName
+    }
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
-
-  private def ensureCatalog(s: SparkSession, dir: String): String = {
-    sweepStopped()
-    built.getOrElseUpdate((s, dir), new LazyCatalog(() => {
-      val pid = ProcessHandle.current().pid()
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val slug = md.digest(dir.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12) + "_" + buildSeq.incrementAndGet()
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_fpcat_${pid}_$slug"
-      val f = new java.io.File(path)
-      if (f.exists()) rmTree(f) // stale from a failed earlier attempt
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(f)))
-      writeCatalog(
-        Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
-        path, s"graft_fpcat_$slug")
-    })).value
-  }
+  private def ensureCatalog(s: SparkSession, dir: String): String =
+    sessionCatalog(s, "fpcat", dir)(writeCatalog)
 
   /** Historical catalog = even doc_ids; the arriving batch is the whole
     * table, so the evens eliminate themselves against the catalog and
@@ -547,24 +517,9 @@ object IncrementalDedup {
       |ORDER BY doc_id""".stripMargin))
 
   // Band-catalog fixture: same memo discipline as [[ensureCatalog]],
-  // distinct key space ("bands:" prefix) and table slug.
-  private def ensureBandCatalog(s: SparkSession, dir: String): String = {
-    sweepStopped()
-    built.getOrElseUpdate((s, s"bands:$dir"), new LazyCatalog(() => {
-      val pid = ProcessHandle.current().pid()
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val slug = md.digest(dir.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12) + "_" + buildSeq.incrementAndGet()
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_fzcat_${pid}_$slug"
-      val f = new java.io.File(path)
-      if (f.exists()) rmTree(f)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(f)))
-      writeBandCatalog(
-        Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
-        path, s"graft_fzcat_$slug")
-    })).value
-  }
+  // distinct tag and table name.
+  private def ensureBandCatalog(s: SparkSession, dir: String): String =
+    sessionCatalog(s, "fzcat", dir)(writeBandCatalog)
 
   /** Fuzzy face of `dedup_incremental`: same even-ids history, NEAR-dup
     * elimination through the persisted band catalog — evens
@@ -592,15 +547,8 @@ object IncrementalDedup {
   // The bloom is a per-catalog-epoch artifact: memoized like the catalog
   // itself so every batch (and the bench's repeated runs) reuses one
   // build, which is the production shape the scaladoc promises.
-  private val blooms =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), LazyBloom]
-  private final class LazyBloom(build: () => Array[Byte]) {
-    lazy val value: Array[Byte] = build()
-  }
-  private def ensureBloom(s: SparkSession, cat: String): Array[Byte] = {
-    sweepStopped()
-    blooms.getOrElseUpdate((s, cat), new LazyBloom(() => catalogBloom(s, cat))).value
-  }
+  private def ensureBloom(s: SparkSession, cat: String): Array[Byte] =
+    FixtureStore.perSession(s, ("bloom", cat))(catalogBloom(s, cat))
 
   /** Same contract and oracle as `dedup_incremental`, through the Bloom
     * prefilter path — proves output-equivalence against the identical

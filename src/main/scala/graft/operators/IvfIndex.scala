@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -319,13 +319,12 @@ object IvfIndex {
 
   // ---- oracle-gated query over the PERSISTED lifecycle ----------------
 
-  // One index build per testdata dir per JVM — the [[FixtureStore]]
-  // memo (the IncrementalDedup catalog-fixture pattern).
+  // One index build per testdata dir per JVM ([[FixtureStore.onDisk]]).
   private def ensureIndex(s: SparkSession, dir: String): String =
-    FixtureStore.ensure("ivfidx", dir)(p => { build(Tables.embeddings(s, dir), p); () })
+    FixtureStore.onDisk("ivfidx", dir)(p => { build(Tables.embeddings(s, dir), p); () })
 
   private def ensurePqIndex(s: SparkSession, dir: String): String =
-    FixtureStore.ensure("ivfpqidx", dir)(p => { buildPq(Tables.embeddings(s, dir), p); () })
+    FixtureStore.onDisk("ivfpqidx", dir)(p => { buildPq(Tables.embeddings(s, dir), p); () })
 
   /** `ann_ivf_kmeans_topk` through the PERSISTED lifecycle: build the
     * index to storage ONCE (memoized fixture), reload centroids, probe

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.FixtureStore
 import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,7 +130,7 @@ object KnnGraphStore {
     * use, then every graph consumer in the battery reads the same
     * files (the `ann_ivf_persisted_topk` fixture pattern). */
   private[operators] def pathOf(s: SparkSession, dir: String): String =
-    FixtureStore.ensure("knngraph", dir)(p => build(s, dir, p))
+    FixtureStore.onDisk("knngraph", dir)(p => build(s, dir, p))
 
   private[operators] def edgesOf(s: SparkSession, dir: String): DataFrame =
     edges(s, pathOf(s, dir))
@@ -155,7 +156,7 @@ object KnnGraphStore {
     * the read pays probe cost only. */
   private val knnGraphRefreshed = QueryDef(
     (s, dir) => {
-      val path = FixtureStore.ensure("knngrefresh", dir) { p =>
+      val path = FixtureStore.onDisk("knngrefresh", dir) { p =>
         val full = graft.Tables.embeddings(s, dir)
         val cut = full.agg(expr("percentile_approx(vec_id, 0.5)"))
           .head().getLong(0)

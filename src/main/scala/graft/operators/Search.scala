@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -398,27 +398,10 @@ object Search {
       s: SparkSession, path: String, terms: Seq[String]): DataFrame =
     bm25Rollup(prunedCandidates(s, path, terms))
 
-  // one index build per testdata dir per JVM — the IvfIndex memo pattern
-  private final class LazyIdx(b: () => String) { lazy val value: String = b() }
-  private val textIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, LazyIdx]
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
+  // one index build per testdata dir per JVM ([[FixtureStore.onDisk]])
   private[graft] def ensureTextIndex(s: SparkSession, dir: String): String =
-    textIndexes.getOrElseUpdate(dir, new LazyIdx(() => {
-      val pid = ProcessHandle.current().pid()
-      val slug = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_textidx_${pid}_$slug"
-      val f = new java.io.File(path)
-      if (f.exists()) rmTree(f)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(f)))
-      buildTextIndex(Tables.documentsSpread(s, dir), path)
-      path
-    })).value
+    FixtureStore.onDisk("textidx", dir)(
+      p => buildTextIndex(Tables.documentsSpread(s, dir), p))
 
   /** [[searchBm25]] through the PERSISTED lifecycle: build the
     * term-partitioned index ONCE (memoized fixture), probe it with

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1323,20 +1323,12 @@ ${topKTailSql("scored")}"""
     * identical Lloyd jobs), which is also the production reality: books
     * train once, queries reuse them. `residual = false` trains on the
     * normalized vectors `nx`; `residual = true` runs the identical Lloyd
-    * arithmetic over the residuals `rx` ([[pqResidualFrame]]). Same
-    * lazy-holder/putIfAbsent concurrency shape as the incremental-dedup
-    * catalog memo; stopped-session keys sweep on lookup. */
-  private final class LazyBooks(build: () => Seq[Seq[SubCentroid]]) {
-    lazy val value: Seq[Seq[SubCentroid]] = build()
-  }
-  private val pqBooksMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Boolean), LazyBooks]
-  private def pqBooksFor(s: SparkSession, dir: String, residual: Boolean): Seq[Seq[SubCentroid]] = {
-    pqBooksMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqBooksMemo.remove)
-    pqBooksMemo.getOrElseUpdate((s, dir, residual), new LazyBooks(() => pqTrainBooks(
+    * arithmetic over the residuals `rx` ([[pqResidualFrame]]). Memoized
+    * through [[FixtureStore.perSession]]. */
+  private def pqBooksFor(s: SparkSession, dir: String, residual: Boolean): Seq[Seq[SubCentroid]] =
+    FixtureStore.perSession(s, ("pq_books", dir, residual))(pqTrainBooks(
       if (residual) pqResidualFrame(s, dir)._1.select(col("vec_id"), col("rx").as("nx"))
-      else pqNormalized(s, dir)))).value
-  }
+      else pqNormalized(s, dir)))
 
   /** One subspace codeword. Field names are what the encode fold reads. */
   private[operators] case class SubCentroid(code: Int, cvec: Seq[Double])
@@ -1842,29 +1834,20 @@ ${topKTailSql("scored")}"""
     // silent contract change.
   }
 
-  /** Corpus row count, ONE action per (session, dir) — [[adaptiveNlist]]
-    * sizing is metadata, and every cell-family construction over the
-    * same corpus reuses it. Same lazy-holder/putIfAbsent shape as
-    * [[pqBooksMemo]]; stopped-session keys sweep on lookup. */
-  private final class LazyCount(build: () => Long) {
-    lazy val value: Long = build()
-  }
-  private val corpusCountMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), LazyCount]
-  /** r20 (r19 advice, low): the memo key carries the embeddings
-    * directory's mtime — a corpus REWRITTEN within a session (parquet
-    * overwrite touches the directory) invalidates the cached count, so
-    * the band-ladder rung and the DuckDB twin (which recomputes
-    * count(*) at query time) re-parameterize from the same corpus
-    * instead of diverging on a stale memo. One File.lastModified stat
-    * per lookup — metadata-priced, same as the sizing count it guards. */
+  /** Corpus row count, ONE action per (session, dir, corpus mtime)
+    * ([[FixtureStore.perSession]]) — [[adaptiveNlist]] sizing is
+    * metadata, and every cell-family construction over the same corpus
+    * reuses it. The key carries the embeddings directory's mtime: a
+    * corpus REWRITTEN within a session (parquet overwrite touches the
+    * directory) keys a fresh count, so the band-ladder rung and the
+    * DuckDB twin (which recomputes count(*) at query time)
+    * re-parameterize from the same corpus instead of diverging on a
+    * stale memo. One File.lastModified stat per lookup —
+    * metadata-priced, same as the sizing count it guards. */
   private[graft] def embeddingsCountFor(s: SparkSession, dir: String): Long = {
     val snap = new java.io.File(s"$dir/embeddings.parquet").lastModified()
-    corpusCountMemo.keys.filter(k =>
-      k._1.sparkContext.isStopped || (k._2 == dir && k._3 != snap))
-      .foreach(corpusCountMemo.remove)
-    corpusCountMemo.getOrElseUpdate((s, dir, snap),
-      new LazyCount(() => Tables.embeddings(s, dir).count())).value
+    FixtureStore.perSession(s, ("embeddings_count", dir, snap))(
+      Tables.embeddings(s, dir).count())
   }
 
   private def seededAssigned(s: SparkSession, dir: String): DataFrame =

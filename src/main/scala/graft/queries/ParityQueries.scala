@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.FixtureStore
 import graft.filter.{FilterChain, FilterSpec}
 import graft.model.{ConsumerPartition, ConsumerState}
 import graft.retry.ExponentialBackoffRetry
@@ -24,31 +25,12 @@ object ParityQueries {
       .withColumnRenamed("partition", "log_partition")
       .withColumnRenamed("offset", "log_offset")
 
-  // One V2-layout materialization of the event log per (process, dir) —
-  // the ensureTextIndex memo pattern; the fixture is what a deployment
+  // One V2-layout materialization of the event log per (process, dir)
+  // ([[FixtureStore.onDisk]]); the fixture is what a deployment
   // maintains as its log segments.
-  // LazyIdx wrapper (the ensureTextIndex pattern): TrieMap's by-name
-  // getOrElseUpdate evaluates racing builders EAGERLY in both threads —
-  // two concurrent first calls would double-materialize into one path
-  private final class LazyV2(b: () => String) { lazy val value: String = b() }
-  private val v2Logs =
-    scala.collection.concurrent.TrieMap.empty[String, LazyV2]
   private def ensureV2Log(s: SparkSession, dir: String): String =
-    v2Logs.getOrElseUpdate(dir, new LazyV2(() => {
-      val pid = ProcessHandle.current().pid()
-      val slug = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_v2log_${pid}_$slug"
-      graft.sources.GraftLog.materialize(ParquetEventLog(dir, 4).read(s), path)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
-      path
-    })).value
+    FixtureStore.onDisk("v2log", dir)(
+      p => graft.sources.GraftLog.materialize(ParquetEventLog(dir, 4).read(s), p))
 
   /** The NATIVE DataSource V2 connector face (S1/S2's assign+seek+poll
     * as a [[graft.sources.GraftLogProvider]] MicroBatchStream/Batch):
@@ -109,15 +91,10 @@ object ParityQueries {
     * assignment order. */
   private val logV2Produce = QueryDef(
     (s, dir) => {
-      val pid = ProcessHandle.current().pid()
-      val slug = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_v2produce_${pid}_$slug"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(path)) // a re-run in this process produces afresh
+      // the store owns the path and its reclamation; the produce itself
+      // is the query under test, so every run writes afresh
+      val path = FixtureStore.onDisk("v2produce", dir)(_ => ())
+      FixtureStore.rmTree(new java.io.File(path))
       graft.Tables.events(s, dir)
         .selectExpr("cast(user_id % 4 as int) as partition",
           "cast(-1 as long) as offset",
@@ -157,57 +134,15 @@ object ParityQueries {
 
   /** 500 deterministic tenant keys — large enough that inlining them as a
     * literal `isin` is the wrong shape (the r3/r4 SkipList point), small
-    * enough to stay test-fast. Path is per-process (concurrent harness runs
-    * must not collide) and written at most once per JVM — the oracle SQL
-    * below captures the same path at object init, and Verify dumps it from
-    * this same process, so DuckDB scans the parquet this run wrote. */
-  private val SkipListPath =
-    s"${System.getProperty("java.io.tmpdir")}/graft_skiplist_keys_${ProcessHandle.current().pid()}"
+    * enough to stay test-fast. The parquet table is a per-process
+    * artifact written once ([[FixtureStore.onDisk]]); the oracle below
+    * regenerates the same keys inline with the same arithmetic, so it
+    * never reads what the query under test wrote. */
   private val SkipListKeys: Seq[String] =
     (0 until 500).map(i => ((i.toLong * 7919 + 13) % 5000).toString).distinct
-  // Double-checked lock, not a CAS gate: a concurrent second caller must
-  // BLOCK until the fixture exists (a lost CAS would race ahead and plan
-  // against a missing path), and a failed write must leave the flag
-  // unset so the next caller retries instead of running unfixtured.
-  @volatile private var skipListWritten = false
-  private val skipListLock = new Object
-
-  /** Reclaim fixtures left by FINISHED runs. A shutdown hook can't do this:
-    * the driver's DuckDB compare reads the fixture AFTER this JVM exits
-    * (oracle_sql.json carries the path), so our own fixture must outlive
-    * us — instead each new run deletes siblings whose writer pid is dead
-    * AND whose fixture is old enough that no post-exit compare can still
-    * be pending (a run that just exited has a compare in flight for at
-    * most minutes; the age gate keeps the race window closed). Live
-    * concurrent runs (pid alive) are never touched. */
-  private def reapStaleSkipLists(): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val mine = ProcessHandle.current().pid()
-    val minAgeMs = 60L * 60 * 1000
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      f.getName match {
-        case s"graft_skiplist_keys_$pid"
-            if pid.nonEmpty && pid.length < 19 && pid.forall(_.isDigit) &&
-              pid.toLong != mine &&
-              !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false) &&
-              System.currentTimeMillis() - f.lastModified() > minAgeMs =>
-          rm(f)
-        case _ => ()
-      }
-    }
-  }
-  private def ensureSkipList(s: SparkSession): Unit =
-    if (!skipListWritten) skipListLock.synchronized {
-      if (!skipListWritten) {
-        reapStaleSkipLists()
-        graft.ops.SkipList.write(s, SkipListPath, SkipListKeys)
-        skipListWritten = true
-      }
-    }
+  private def skipListPath(s: SparkSession): String =
+    FixtureStore.onDisk("skiplist_keys", "tenants")(
+      p => graft.ops.SkipList.write(s, p, SkipListKeys))
 
   /** Table-backed KeyFilter (F4 at scale): the skip-list lives in a
     * parquet table and applies as a broadcast LEFT ANTI join through the
@@ -217,9 +152,8 @@ object ParityQueries {
     * sideline control store. */
   private val fhSkiplistAnti = QueryDef(
     (s, dir) => {
-      ensureSkipList(s)
       val spec = FilterSpec.fromJson(
-        FilterSpec.KeyInTable("key", SkipListPath).toJson)
+        FilterSpec.KeyInTable("key", skipListPath(s)).toJson)
       val chain = FilterChain.empty.withStep("skip", spec)
       chain.applyKeep(log(s, dir))
         .select("log_partition", "log_offset", "event_id", "key", "event_type")
@@ -227,7 +161,8 @@ object ParityQueries {
     },
     Some(s"""$logCte
       |SELECT log_partition, log_offset, event_id, key, event_type FROM log
-      |WHERE key NOT IN (SELECT key FROM '$SkipListPath/*.parquet')
+      |WHERE key NOT IN (
+      |  SELECT CAST((i * 7919 + 13) % 5000 AS VARCHAR) FROM range(500) t(i))
       |ORDER BY event_id""".stripMargin))
 
   /** Tenant-PATTERN filter (the regex FilterChainStep recipe): drop every

@@ -157,23 +157,17 @@ final case class ParquetEventLog(dir: String, numPartitions: Int = 4)
     extends LogSource {
   val namespace = "events"
 
-  /** The synthesized log view is the engine's "open consumer": cache it
-    * per (session, dir, P) so the offset-synthesis window runs once per
-    * process, not once per query — the reference likewise keeps one
-    * consumer open across nextRecord calls (and closes it on spout close,
-    * which [[ParquetEventLog.invalidate]] / the ApplicationEnd hook mirror
-    * here so a long-lived JVM hosting many sessions never accretes dead
-    * log views). Real log sources (KafkaLogSource/FileLogSource) carry
-    * native offsets and skip this. */
-  def read(spark: SparkSession): DataFrame = {
-    ParquetEventLog.sweepStopped()
-    ParquetEventLog.cache.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, numPartitions), {
-        ParquetEventLog.hookContext(spark)
-        (spark,
-          build(spark).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })._2
-  }
+  /** The synthesized log view is the engine's "open consumer": one view
+    * per (session, dir, P), memoized through [[graft.FixtureStore]] and
+    * swept when its session's context stops — the reference likewise
+    * keeps one consumer open across nextRecord calls and closes it when
+    * the spout closes. The view is memoized, NOT cached: every action
+    * re-plans it from the parquet, so nothing goes stale after
+    * `spark.catalog.clearCache()` and no harness pass reads blocks an
+    * earlier pass stored. Real log sources
+    * (KafkaLogSource/FileLogSource) carry native offsets and skip this. */
+  def read(spark: SparkSession): DataFrame =
+    graft.FixtureStore.perSession(spark, ("event_log", dir, numPartitions))(build(spark))
 
   private def build(spark: SparkSession): DataFrame = {
     val raw = graft.Tables.events(spark, dir)
@@ -203,68 +197,4 @@ object LogSource {
     * parquet scan as a pushed filter); the join wins once expression size
     * would grow with the partition count. */
   val MaxInlineBounds = 64
-}
-
-object ParquetEventLog {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, Int), (SparkSession, DataFrame)]
-  private val hookedContexts =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private[sources] def cachedFor(spark: SparkSession): Int =
-    cache.count { case (_, (s, _)) => s eq spark }
-
-  /** Explicitly release one session's cached log views, so a finished
-    * short-lived session (and everything it pins) becomes collectable.
-    * Blocks are unpersisted only when no OTHER live session still caches
-    * the same (dir, partitions) view: sessions of one context share the
-    * CacheManager, which matches by canonical plan, so unpersisting a
-    * shared view would silently uncache every sibling. Safe to call
-    * twice. */
-  def invalidate(spark: SparkSession): Unit =
-    cache.toSeq.foreach { case (k @ (_, d, n), (s, df)) =>
-      if (s eq spark) {
-        cache.remove(k)
-        val sharedElsewhere = cache.exists { case ((_, d2, n2), (s2, _)) =>
-          d2 == d && n2 == n && (s2.sparkContext eq spark.sparkContext)
-        }
-        if (!sharedElsewhere && !spark.sparkContext.isStopped)
-          try df.unpersist(blocking = false)
-          catch { case _: Exception => () }
-      }
-    }
-
-  /** Drop entries whose backing context has stopped — their cached blocks
-    * died with the executors; keeping the plans would pin dead sessions
-    * forever. Runs on every read, so the cache self-heals even without
-    * the listener. */
-  private[sources] def sweepStopped(): Unit =
-    cache.filterInPlace { case (_, (s, _)) => !s.sparkContext.isStopped }
-
-  /** One listener per context: releases that context's entries at
-    * ApplicationEnd (the "consumer close" of the synthesized log). */
-  private[sources] def hookContext(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    hookedContexts.getOrElseUpdate(sc.applicationId, {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          releaseContext(sc)
-      })
-      ()
-    })
-  }
-
-  /** Release every entry backed by `sc` (listener target; also the test
-    * seam for the stopped-session path, which a shared-context test JVM
-    * cannot exercise by actually stopping the context). */
-  private[sources] def releaseContext(sc: org.apache.spark.SparkContext): Unit =
-    cache.toSeq.foreach { case (k, (s, df)) =>
-      if (s.sparkContext eq sc) {
-        cache.remove(k)
-        if (!sc.isStopped)
-          try df.unpersist(blocking = false)
-          catch { case _: Exception => () }
-      }
-    }
 }

@@ -88,6 +88,17 @@ class PlanSuite extends SparkSuite {
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }
 
+  test("no oracle reads a file under java.io.tmpdir") {
+    // an oracle recomputes from the testdata tables; one that scans an
+    // artifact the query under test wrote checks that query against
+    // itself, and its text changes with the writer's pid
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getPath
+    val offenders = SparkEntry.oracleSql.collect {
+      case (q, sql) if sql.contains(tmp + java.io.File.separator) => q
+    }
+    assert(offenders.isEmpty, s"oracles naming $tmp: ${offenders.toSeq.sorted}")
+  }
+
   test("TPC-H extras: scan-bound predicates push, dims broadcast, EXISTS stays semi") {
     // q6 — THE scan query: all three predicates reach the parquet scan
     val p6 = plan("q6_forecast_revenue")
