@@ -1,5 +1,5 @@
 package graft
-import graft.metrics.JobGroupCollector
+import graft.metrics.{JobGroupCollector, LabeledRun}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * of the work) and prints the full JSON record with per-query seconds,
   * then a compact `"metric":"summary"` line as the LAST stdout line.
   * Queries that threw are listed under `"failed"`, outside `queries`
-  * and `total`. */
+  * and `total`. The per-run result file also holds, under `"detail"`,
+  * each query's min-wall pass: construct/exec ms, stages, tasks,
+  * shuffle read/write and input bytes. */
 object Bench {
   /** 1-minute load average and the number of OTHER JVMs running — a
     * contended host inflates results 3-6x (the r2 driver reading was 4x
@@ -138,13 +140,13 @@ object Bench {
     // otherwise time a partial cache hit in pass 2. Each pass's wall,
     // task count and input bytes go to stderr, so a cache hit shows.
     val collector = JobGroupCollector.attach(spark)
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[LabeledRun] = {
       spark.catalog.clearCache()
       val r = collector.run(name)(fn(spark, sfDir))
       r.error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
       System.err.println(s"[bench] $name pass: wall_s=${r.wallSec.fold("null")(v => f"$v%.3f")} " +
         s"tasks=${r.totals.tasks} input_bytes=${r.totals.inputBytes}")
-      r.wallSec
+      r.wallSec.map(_ => r)
     }
     // SPARK_GRAFT_QUERIES=a,b,c restricts the run to a subset — for
     // timing one query's change without paying the full sweep.
@@ -168,19 +170,21 @@ object Bench {
     val reruns = scala.collection.mutable.LinkedHashMap[String, Int]()
     val suspects = scala.collection.mutable.ListBuffer[String]()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var best = for (a <- once(name, fn); b <- once(name, fn)) yield math.min(a, b)
+      var best = for (a <- once(name, fn); b <- once(name, fn))
+        yield Seq(a, b).minBy(_.wallSec.get)
       baseline.get(name).filter(_ > 0).foreach { solo =>
         var extra = 0
-        while (best.exists(_ > 3 * solo) && extra < 2) {
+        while (best.exists(_.wallSec.get > 3 * solo) && extra < 2) {
           extra += 1
-          best = for (b <- best; r <- once(name, fn)) yield math.min(b, r)
+          best = for (b <- best; r <- once(name, fn)) yield Seq(b, r).minBy(_.wallSec.get)
         }
         if (extra > 0) reruns(name) = extra
-        if (best.exists(_ > 3 * solo)) suspects += name
+        if (best.exists(_.wallSec.get > 3 * solo)) suspects += name
       }
       name -> best
     }
-    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val bestRuns = results.collect { case (k, Some(r)) => k -> r }
+    val timed = bestRuns.map { case (k, r) => k -> r.wallSec.get }
     val failed = results.collect { case (k, None) => k }
     val qs = timed.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
       .mkString("{", ",", "}")
@@ -215,10 +219,16 @@ object Bench {
     // full record is ALSO written to a per-run file (overlapping runs
     // never clobber each other), and stdout ENDS with a compact summary
     // line (<500 bytes, "metric":"summary") naming that file.
+    val detail = bestRuns.map { case (k, r) =>
+      val t = r.totals
+      f""""$k":{"construct_ms":${r.constructMs.get}%.1f,"exec_ms":${r.execMs.get}%.1f,""" +
+        s""""stages":${r.stages.size},"tasks":${t.tasks},"shuffle_read":${t.shuffleReadBytes},""" +
+        s""""shuffle_write":${t.shuffleWriteBytes},"input_bytes":${t.inputBytes}}"""
+    }.mkString("{", ",", "}")
     val resultFile = sys.env.getOrElse("SPARK_GRAFT_RESULT_FILE",
       s"BENCH_RESULT_${ProcessHandle.current().pid()}.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(resultFile), record + "\n")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(resultFile),
+      record.stripSuffix("}") + s""","detail":$detail}""" + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] result-file write failed: ${e.getMessage}")
     }

@@ -246,12 +246,12 @@ object ScaleReport {
     }
     dirs.map { case (tag, dir) =>
       settle(spark)
-      val path = graft.operators.IvfIndex.pqIndexPath(spark, dir)
+      val path = graft.operators.IvfIndex.ensurePqIndex(spark, dir)
       val emb = graft.Tables.embeddings(spark, dir)
       val q = emb.filter(col("vec_id") === 0L)
         .select("vec_id", "embedding").collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
-      val cents = graft.operators.IvfIndex.centroidsOf(spark, path)
+      val cents = graft.operators.IvfIndex.loadCentroids(spark, path)
       val nprobe = 2
       val cells = graft.operators.IvfIndex.rankedCells(cents, q.head._2, nprobe)
       val codesTotal = duData(new java.io.File(s"$path/codes"))

@@ -316,8 +316,9 @@ object NearestCentroid {
  * skips that codeword; a null `sub` yields the initial code (-1), a
  * null `cbs` yields null. PQ encode runs this M times per row
  * (M×K×subdim multiply-adds — linear in N but the same interpreted-HOF
- * constant the assignment kernel shed), and the per-subspace Lloyd
- * trainer runs it once per train row per iteration.
+ * constant the assignment kernel shed). The per-subspace Lloyd trainer
+ * assigns on the driver with its exact replica,
+ * `Similarity.nearestCodeLocal`.
  */
 final case class NearestCode(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {

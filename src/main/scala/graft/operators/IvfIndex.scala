@@ -26,61 +26,34 @@ import org.apache.spark.sql.functions._
  *                  100 TB: probe cost scales with nprobe/nlist × corpus,
  *                  not corpus.
  *
- * Training mirrors the `ann_ivf_kmeans_topk` query exactly (bounded
- * deterministic sample, Lloyd with 6-decimal rounding, driver-held
- * centroids), so index quality is the measured recall in METRICS; this
+ * Training IS the `ann_ivf_kmeans_topk` trainer ([[Similarity.trainIvf]]:
+ * the bounded deterministic sample, driver-local Lloyd with 6-decimal
+ * rounding), so index quality is the measured recall in METRICS; this
  * class adds persistence + pruning, not new math.
  */
 object IvfIndex {
-
-  /** Index spec. `trainPerCentroid` bounds the k-means sample (the FAISS
-    * convention) so training cost is O(nlist), not O(corpus). Defaults
-    * ARE the `ann_ivf_kmeans_topk` constants — that coupling is what
-    * lets `ann_ivf_persisted_topk` reuse the kmeans oracle verbatim. */
-  final case class Spec(
-      nlist: Int = Similarity.NumCentroids,
-      iters: Int = Similarity.KmeansIters,
-      trainPerCentroid: Int = Similarity.TrainPerCentroid) {
-    require(nlist >= 1 && iters >= 0 && trainPerCentroid >= 1, s"bad spec: $this")
-    def trainCap: Long = nlist.toLong * trainPerCentroid
-  }
 
   private def withNorm(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(Similarity.dotCol("embedding", "embedding")))
 
-  /** Train the quantizer and persist centroids + the assigned corpus.
-    * One pass over the corpus for assignment (zero shuffle — the
-    * centroid array is a literal in the fold), then a partitioned write.
-    * Returns the trained centroid count actually written. */
-  def build(emb: DataFrame, path: String, spec: Spec = Spec()): Int = {
+  /** Train the quantizer ([[Similarity.trainIvf]] over the one-collect
+    * [[Similarity.ivfSample]] — the `ann_ivf_kmeans_topk` trainer itself)
+    * and persist centroids + the assigned corpus. One pass over the
+    * corpus for assignment (zero shuffle — the centroid array is a
+    * literal in the fold), then a partitioned write. Returns the trained
+    * centroid count actually written. */
+  def build(emb: DataFrame, path: String): Int = {
     val s = emb.sparkSession
-    val e = withNorm(emb)
-    val train = e.filter(col("vec_id") < spec.trainCap)
-      .repartition(8).persist()
-    try {
-      val seeds = Similarity.collectCentroids(
-        train.filter(col("vec_id") < spec.nlist)
-          .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"),
-            col("nrm").as("cnrm")))
-      require(seeds.nonEmpty, "no seed vectors: corpus has no vec_id < nlist")
-      def lloyd(cents: Seq[Similarity.Centroid]): Seq[Similarity.Centroid] =
-        Similarity.collectCentroids(Similarity.assignCells(train, cents)
-          .groupBy(col("cell").as("cent_id"))
-          .agg(array((1 to seeds.head.cvec.length).map(i =>
-            round(avg(element_at(col("embedding"), i).cast("double")), 6)): _*)
-            .as("cvec"))
-          .withColumn("cnrm", sqrt(Similarity.dotCol("cvec", "cvec"))))
-      val trained = (1 to spec.iters).foldLeft(seeds)((c, _) => lloyd(c))
-      import s.implicits._
-      trained.toDF().write.mode("overwrite").parquet(s"$path/centroids")
-      Similarity.assignCells(e, trained)
-        .withColumn("epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("epoch", "cell")
-        .parquet(s"$path/assigned")
-      graft.ops.EpochCommit.mark(s, s"$path/assigned", 0L)
-      trained.length
-    } finally { train.unpersist(); () }
+    val trained = Similarity.trainIvf(Similarity.ivfSample(emb))
+    import s.implicits._
+    trained.toDF().write.mode("overwrite").parquet(s"$path/centroids")
+    Similarity.assignCells(withNorm(emb), trained)
+      .withColumn("epoch", lit(0L))
+      .write.mode("overwrite").partitionBy("epoch", "cell")
+      .parquet(s"$path/assigned")
+    graft.ops.EpochCommit.mark(s, s"$path/assigned", 0L)
+    trained.length
   }
 
   /** Assign a NEW batch with the already-trained quantizer and append it
@@ -126,7 +99,7 @@ object IvfIndex {
         .write.mode("append").partitionBy("epoch", "cell").parquet(root))
   }
 
-  private[operators] def loadCentroids(
+  private[graft] def loadCentroids(
       s: SparkSession, path: String): Seq[Similarity.Centroid] =
     Similarity.collectCentroids(
       s.read.parquet(s"$path/centroids").select("cent_id", "cvec", "cnrm"))
@@ -143,9 +116,7 @@ object IvfIndex {
     require(nprobe >= 1 && topk >= 1, s"bad probe params: nprobe=$nprobe topk=$topk")
     val cents = loadCentroids(s, path)
     val probeRows = queries.flatMap { case (qid, q) =>
-      var qnrm = 0.0
-      q.foreach(x => qnrm += x.toDouble * x.toDouble)
-      qnrm = math.sqrt(qnrm)
+      val qnrm = Similarity.normLocal(q.map(_.toDouble))
       // rank ALL cells (there are only nlist) by the same (sim DESC,
       // cent_id) order the fold uses, take the nprobe nearest
       rankedCells(cents, q, nprobe).map(cell => (qid, q, qnrm, cell))
@@ -257,9 +228,7 @@ object IvfIndex {
     * can compute which partition directories a probe may touch. */
   private[graft] def rankedCells(cents: Seq[Similarity.Centroid],
       q: Seq[Float], nprobe: Int): Seq[Long] = {
-    var qnrm = 0.0
-    q.foreach(x => qnrm += x.toDouble * x.toDouble)
-    qnrm = math.sqrt(qnrm)
+    val qnrm = Similarity.normLocal(q.map(_.toDouble))
     cents.map { c =>
       var dot = 0.0
       var i = 0
@@ -267,16 +236,6 @@ object IvfIndex {
       (c.cent_id, dot / (qnrm * c.cnrm))
     }.sortBy { case (id, sim) => (-sim, id) }.take(nprobe).map(_._1)
   }
-
-  /** Fixture path of the persisted PQ index for `dir` (building it on
-    * first call) — the scaling census's entry point (r19). */
-  private[graft] def pqIndexPath(s: SparkSession, dir: String): String =
-    ensurePqIndex(s, dir)
-
-  /** Driver-side centroid load for census callers (r19). */
-  private[graft] def centroidsOf(
-      s: SparkSession, path: String): Seq[Similarity.Centroid] =
-    loadCentroids(s, path)
 
   def probePq(
       s: SparkSession, path: String, emb: DataFrame,
@@ -290,9 +249,7 @@ object IvfIndex {
       .map(c => c.cvec.map(_ / c.cnrm).toIndexedSeq).toIndexedSeq)
     val booksVecs: Seq[Seq[Seq[Double]]] = books.map(_.map(_.cvec))
     val probeRows = queries.flatMap { case (qid, q) =>
-      var qnrm = 0.0
-      q.foreach(x => qnrm += x.toDouble * x.toDouble)
-      qnrm = math.sqrt(qnrm)
+      val qnrm = Similarity.normLocal(q.map(_.toDouble))
       val qx = q.map(_.toDouble / qnrm)
       rankedCells(cents, q, nprobe).map(cell => (qid, qx, cell))
     }
@@ -323,13 +280,15 @@ object IvfIndex {
   private def ensureIndex(s: SparkSession, dir: String): String =
     FixtureStore.onDisk("ivfidx", dir)(p => { build(Tables.embeddings(s, dir), p); () })
 
-  private def ensurePqIndex(s: SparkSession, dir: String): String =
+  /** Fixture path of the persisted PQ index for `dir`, built on first
+    * call — also the scaling census's entry point. */
+  private[graft] def ensurePqIndex(s: SparkSession, dir: String): String =
     FixtureStore.onDisk("ivfpqidx", dir)(p => { buildPq(Tables.embeddings(s, dir), p); () })
 
   /** `ann_ivf_kmeans_topk` through the PERSISTED lifecycle: build the
     * index to storage ONCE (memoized fixture), reload centroids, probe
-    * with partition pruning. `Spec`'s defaults are the kmeans query's
-    * constants and `probe`'s cell ranking/scoring replicate its math
+    * with partition pruning. [[build]] trains with the kmeans query's
+    * own trainer and `probe`'s cell ranking/scoring replicate its math
     * exactly, so the kmeans DuckDB twin is reused VERBATIM — the oracle
     * now gates the parquet round-trip, the cell-partitioned layout, and
     * the pruned probe path, not just the inline plan. */

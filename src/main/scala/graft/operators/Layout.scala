@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
  * exact integer arithmetic (mul/div/shift/mask, identical both engines).
  *
  * Shape at 100 TB: the two maxes are a one-row broadcast; the z-key is
- * pure per-row narrow math; clustering = ONE repartitionByRange(z) +
- * partition-local sort (the [[ShardedExport]] write shape); the
- * cell-stats report is one map-side-combined groupBy over cell ids.
+ * pure per-row narrow math; clustering = one exact z-quantile aggregate
+ * (a count per distinct z key) + ONE exchange by file id +
+ * partition-local sort; the cell-stats report is one map-side-combined
+ * groupBy over cell ids.
  */
 object Layout {
 
@@ -99,10 +100,12 @@ object Layout {
     * every FILE's parquet footer carries narrow min/max on BOTH
     * `z_day` and `z_pk` (LayoutSuite asserts the actual footer
     * statistics), and any reader's predicate on either column prunes
-    * most files from the listing stats alone. ONE repartitionByRange
-    * shuffle (sampled range boundaries ≈ equal-size files) + a
-    * partition-local sort — the [[ShardedExport]] write shape keyed by
-    * the interleave. */
+    * most files from the listing stats alone. File cut points are the
+    * exact z quantiles at i/numFiles, so the layout depends on the data
+    * alone (`repartitionByRange` seeded its sampler with the JVM-global
+    * RDD id). Rows reach their file through one exchange keyed by file
+    * id (a hash partitioner is the identity on 0..numFiles-1), then a
+    * partition-local sort — the [[ShardedExport]] write shape. */
   def writeClustered(s: SparkSession, dir: String, outDir: String,
       numFiles: Int): Unit = {
     val raw = Tables.lineitem(s, dir)
@@ -114,13 +117,20 @@ object Layout {
     // must be non-negative regardless of where shipdates fall vs epoch
     val maxes = raw.agg(min("z_day").as("lo_day"), max("z_day").as("hi_day"),
       max("z_pk").as("max_pk"))
-    raw.crossJoin(broadcast(maxes))
+    val zed = raw.crossJoin(broadcast(maxes))
       .withColumn("zdn",
         expr(s"((z_day - lo_day) * $Top) div greatest(hi_day - lo_day, 1)"))
       .withColumn("zpn", expr(s"(z_pk * $Top) div max_pk"))
       .withColumn("z", expr(zSql("zdn", "zpn")))
       .drop("lo_day", "hi_day", "max_pk", "zdn", "zpn")
-      .repartitionByRange(numFiles, col("z"))
+    val cuts = if (numFiles <= 1) Seq.empty[Double] else zed.agg(percentile(col("z"),
+      typedLit((1 until numFiles).map(_.toDouble / numFiles)))).head().getSeq[Double](0)
+    val filed = zed.withColumn("zfile",
+      cuts.foldLeft(lit(0))((n, c) => n + when(col("z") > c, 1).otherwise(0)))
+    val fileIdx = filed.schema.fieldIndex("zfile")
+    val byFile = filed.rdd.keyBy(_.getInt(fileIdx))
+      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
+    s.createDataFrame(byFile, filed.schema).drop("zfile")
       .sortWithinPartitions("z")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(outDir)

@@ -740,12 +740,7 @@ object Similarity {
     * cent_id so the fold's tie-break stays deterministic regardless of
     * task completion order. Seed centroids carry float vectors, trained
     * ones 6-decimal-rounded doubles; float→double widening is exact, so
-    * unifying on double changes no value. Collecting centroids between
-    * Lloyd iterations is the Spark MLlib KMeans shape — without it each
-    * iteration nests the previous one's full lineage (scan + fold-assign
-    * + a 64-column agg) inside its own plan, and Catalyst planning — not
-    * data — dominated: the query cost ~4.5 s at sf0.01 AND sf0.1
-    * (scale-invariant = planning-bound). */
+    * unifying on double changes no value. */
   private[operators] def collectCentroids(cents: DataFrame): Seq[Centroid] =
     cents.collect().toSeq.map { r =>
       val cv: Seq[Double] = r.getSeq[Any](1).map {
@@ -891,10 +886,7 @@ object Similarity {
         .collect().toSeq
         .map(r => r.getLong(0) -> r.getSeq[Double](1))
         .sortBy(_._1).zipWithIndex
-        .map { case ((_, cv), i) =>
-          Centroid(i.toLong, cv,
-            math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x)))
-        }
+        .map { case ((_, cv), i) => Centroid(i.toLong, cv, normLocal(cv)) }
     }
     (1 to TwoLevelLloydRounds).foldLeft(reps0)((r, _) => lloyd(r))
   }
@@ -999,6 +991,11 @@ object Similarity {
         (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (a, x) => a + x) / (nrm * c.getField("cnrm"))
 
+  /** `sqrt(dotCol(v, v))` on the driver: the same left fold from 0.0 (a
+    * float input widens exactly, so callers may pass it mapped). */
+  private[operators] def normLocal(v: Seq[Double]): Double =
+    math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+
   /** Exact driver-side replica of the [[nearestCentroid]] fold for one
     * query vector: same left-associated double accumulation, same strict
     * `>` improvement over the cent_id-sorted list, same `exclude` probe
@@ -1077,23 +1074,69 @@ object Similarity {
     * Scale shape: the quantizer trains on a BOUNDED sample —
     * `TrainPerCentroid` vectors per centroid (the FAISS IVF training
     * convention; deterministic `vec_id < cap` so the oracle replicates
-    * it) — so the persisted training set, the per-iteration jobs, and
-    * their partition count are O(nlist), independent of corpus size;
-    * the full corpus is touched only by the final one-pass assignment
-    * + re-rank and is never persisted or collected. Assignment is the
+    * it) — collected ONCE and trained on the driver ([[trainIvf]]), the
+    * same collect yielding the NumQueries query vectors. The full corpus
+    * is touched only by the final one-pass assignment + re-rank (the
     * zero-shuffle [[nearestCentroid]] fold over a LITERAL centroid
-    * array; the per-cell mean is ONE map-side-combined groupBy carrying
-    * (cell, 64 partial sums) collected to the driver (8 rows) — the
-    * MLlib KMeans shape (cache input, iterate with driver-held
-    * centroids, unpersist). Probe cells for the NumQueries query
-    * vectors are computed on the driver by the exact fold replica —
-    * queries, like centroids, are metadata-sized. */
+    * array) and is never persisted or collected. */
   private[operators] val NProbe = 2
-  private[operators] val KmeansIters = 3
-  private[operators] val TrainPerCentroid = 256
+  private val KmeansIters = 3
+  private val TrainPerCentroid = 256
   private val TrainCap = TrainPerCentroid * NumCentroids // 2048
-  // ≤2048 rows × ~300 B — single-digit partitions by construction
-  private val TrainParts = 8
+
+  /** Spark's `round(x, 6)` on a double, as `RoundBase` evaluates it
+    * (interpreted and generated): HALF_UP on `BigDecimal.valueOf` — the
+    * SHORTEST round-tripping decimal, not the binary value. */
+  private[operators] def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** THE Lloyd trainer for every capped (metadata-sized) k-means sample:
+    * the IVF quantizer ([[trainIvf]]) and each PQ subspace
+    * ([[pqTrainBooks]]). Each of `rounds` assigns every sample index to
+    * a cell id (`assign(cells)`, an exact driver replica of the Spark
+    * kernel), then takes Spark's `round(avg(x), 6)` per cell and dim: a
+    * double sum from 0.0 in vec_id order, ÷ count, [[round6]] (the
+    * rounding absorbs Spark's partition-order sums). `cells` rebuilds
+    * the list from the non-empty cells' (id, mean), id-ascending. The
+    * two-level reps ([[twoLevelReps]]) train over the centroid table,
+    * which grows with the corpus, so they stay on Spark. */
+  private[operators] def lloydLocal[C](vecs: IndexedSeq[Array[Double]], seeds: Seq[C],
+      rounds: Int)(assign: Seq[C] => Int => Long)(
+      cells: Seq[(Long, Seq[Double])] => Seq[C]): Seq[C] =
+    (1 to rounds).foldLeft(seeds) { (cs, _) =>
+      val members = vecs.indices.groupBy(assign(cs))
+      cells(members.toSeq.sortBy(_._1).map { case (id, rows) =>
+        id -> vecs.head.indices.map { j =>
+          var sum = 0.0
+          rows.foreach(r => sum += vecs(r)(j))
+          round6(sum / rows.size)
+        }
+      })
+    }
+
+  /** The capped IVF training sample (vec_id, embedding, nrm) for
+    * vec_id < [[TrainCap]], vec_id-ascending, in ONE collect. */
+  private[operators] def ivfSample(emb: DataFrame): IndexedSeq[(Long, Seq[Float], Double)] =
+    emb.filter(col("vec_id") < TrainCap)
+      .select(col("vec_id"), col("embedding"),
+        sqrt(dotCol("embedding", "embedding")))
+      .collect().toIndexedSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
+      .sortBy(_._1)
+
+  /** The IVF quantizer: the first [[NumCentroids]] sample vectors, then
+    * [[KmeansIters]] [[lloydLocal]] rounds assigned by
+    * [[nearestCentroidLocal]]; cells keep their ids. */
+  private[operators] def trainIvf(sample: IndexedSeq[(Long, Seq[Float], Double)]): Seq[Centroid] = {
+    val seeds = sample.filter(_._1 < NumCentroids)
+      .map { case (id, v, n) => Centroid(id, v.map(_.toDouble), n) }
+    require(seeds.nonEmpty, "no seed vectors: corpus has no vec_id < nlist")
+    lloydLocal(sample.map(_._2.map(_.toDouble).toArray), seeds, KmeansIters)(
+      cs => i => nearestCentroidLocal(sample(i)._2, sample(i)._3, cs))(
+      _.map { case (id, cv) => Centroid(id, cv, normLocal(cv)) })
+  }
 
   private val annIvfKmeansTopk = QueryDef(
     (s, dir) => {
@@ -1102,48 +1145,25 @@ object Similarity {
       val emb = Tables.embeddingsSpread(s, dir)
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-      val train = Tables.embeddings(s, dir)
-        .filter(col("vec_id") < TrainCap)
-        .repartition(TrainParts)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", sqrt(dotCol("embedding", "embedding")))
-        .persist()
-      try {
-        // ONE collect serves both seed centroids and the query vectors
-        // (NumQueries <= NumCentroids ids) — each saves a driver job
-        val head = train
-          .filter(col("vec_id") < math.max(NumCentroids, NumQueries))
-          .select(col("vec_id"), col("embedding"), col("nrm"))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
-          .sortBy(_._1)
-        val seeds = head.filter(_._1 < NumCentroids)
-          .map { case (id, v, n) => Centroid(id, v.map(_.toDouble), n) }
-        def lloyd(cents: Seq[Centroid]): Seq[Centroid] =
-          collectCentroids(assignCells(train, cents)
-            .groupBy(col("cell").as("cent_id"))
-            .agg(array((1 to Dim).map(i =>
-              round(avg(element_at(col("embedding"), i).cast("double")), 6)): _*).as("cvec"))
-            .withColumn("cnrm", sqrt(dotCol("cvec", "cvec"))))
-        val trained = (1 to KmeansIters).foldLeft(seeds)((c, _) => lloyd(c))
-        // nprobe=2: the 2 nearest trained cells per query vector,
-        // computed on the driver by the exact fold replica (the second
-        // probe excludes the first's winner)
-        val probeRows = head.filter(_._1 < NumQueries)
-          .flatMap { case (qid, q, qnrm) =>
-            val p1 = nearestCentroidLocal(q, qnrm, trained)
-            val p2 = nearestCentroidLocal(q, qnrm, trained, exclude = p1)
-            Seq((qid, q, qnrm, p1), (qid, q, qnrm, p2))
-          }
-        import s.implicits._
-        val probes = probeRows.toDF("query_id", "q", "qnrm", "cell")
-        val assigned = assignCells(emb, trained)
-        val scored = broadcast(probes)
-          .join(assigned.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("sim", dotCol("q", "embedding") / (col("qnrm") * col("nrm")))
-        topKPerQuery(s, scored)
-      } finally train.unpersist()
+      val sample = ivfSample(Tables.embeddings(s, dir))
+      val trained = trainIvf(sample)
+      // nprobe=2: the 2 nearest trained cells per query vector,
+      // computed on the driver by the exact fold replica (the second
+      // probe excludes the first's winner)
+      val probeRows = sample.filter(_._1 < NumQueries)
+        .flatMap { case (qid, q, qnrm) =>
+          val p1 = nearestCentroidLocal(q, qnrm, trained)
+          val p2 = nearestCentroidLocal(q, qnrm, trained, exclude = p1)
+          Seq((qid, q, qnrm, p1), (qid, q, qnrm, p2))
+        }
+      import s.implicits._
+      val probes = probeRows.toDF("query_id", "q", "qnrm", "cell")
+      val assigned = assignCells(emb, trained)
+      val scored = broadcast(probes)
+        .join(assigned.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .withColumn("sim", dotCol("q", "embedding") / (col("qnrm") * col("nrm")))
+      topKPerQuery(s, scored)
     },
     Some {
       val trainedList = (1 to Dim)
@@ -1319,8 +1339,8 @@ ${topKTailSql("scored")}"""
 
   /** Books are pure driver-side metadata derived deterministically from
     * the dir's embeddings — ONE training per (session, dir, family)
-    * serves every PQ face (the PQ queries would otherwise re-run
-    * identical Lloyd jobs), which is also the production reality: books
+    * serves every PQ face (the PQ queries would otherwise re-collect
+    * and retrain the same sample), which is also the production reality: books
     * train once, queries reuse them. `residual = false` trains on the
     * normalized vectors `nx`; `residual = true` runs the identical Lloyd
     * arithmetic over the residuals `rx` ([[pqResidualFrame]]). Memoized
@@ -1333,19 +1353,13 @@ ${topKTailSql("scored")}"""
   /** One subspace codeword. Field names are what the encode fold reads. */
   private[operators] case class SubCentroid(code: Int, cvec: Seq[Double])
 
-  /** argmin_code ‖sub − cvec‖² — the NATIVE kernel
-    * ([[graft.functions.NearestCode]], the [[nearestCentroid]] pattern
-    * under an L2 objective): strict `<` improvement over the
+  /** argmin_code ‖sub − cvec‖² as the original HOF fold — the executable
+    * spec `SeededQuantizerFaceSuite` pins the NATIVE kernel
+    * ([[graft.functions.NearestCode]]) and its driver replica
+    * [[nearestCodeLocal]] against: strict `<` improvement over the
     * code-ascending list ⇒ ties keep the LOWEST code, exactly the
-    * oracle's `ORDER BY dist, code` row_number. Sub-distance is the
-    * left-assoc 8-term fold from 0.0 ≡ the twin's explicit sum;
-    * [[nearestCodeHofIn]] below is the executable spec the suite pins
-    * the kernel against. */
-  private def nearestCodeIn(cbs: Column, sub: Column): Column =
-    graft.functions.VectorFunctions.nearestCode(cbs, sub)
-
-  /** The original HOF fold, kept as the kernel's bit-identity witness
-    * (`SeededQuantizerFaceSuite`). */
+    * oracle's `ORDER BY dist, code` row_number; the sub-distance is the
+    * left-assoc 8-term fold from 0.0 ≡ the twin's explicit sum. */
   private[operators] def nearestCodeHofIn(cbs: Column, sub: Column): Column =
     aggregate(
       cbs,
@@ -1357,6 +1371,21 @@ ${topKTailSql("scored")}"""
         when(d < acc.getField("dist"),
           struct(c.getField("code").as("code"), d.as("dist"))).otherwise(acc)
       }).getField("code")
+
+  /** Exact driver replica of [[graft.functions.NearestCode]]: left-assoc
+    * squared-L2 from 0.0, strict `<` under Spark's NaN-safe order (the
+    * lowest code wins a tie), other-length codewords skipped, else -1. */
+  private[operators] def nearestCodeLocal(sub: Array[Double], book: Seq[SubCentroid]): Int =
+    book.foldLeft((-1, Double.MaxValue)) { case (acc, c) =>
+      if (c.cvec.length != sub.length) acc
+      else {
+        var d = 0.0
+        var i = 0
+        while (i < sub.length) { val x = sub(i) - c.cvec(i); d += x * x; i += 1 }
+        if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(d, acc._2) < 0) (c.code, d) else acc
+      }
+    }._1
 
 
   /** Product-quantized corpus + ADC scoring (Jégou et al. 2011, "Product
@@ -1384,8 +1413,9 @@ ${topKTailSql("scored")}"""
     * per-subspace partial sum — a different association from the twin's
     * flat one). Codebooks seed from the normalized first [[PqK]] vectors
     * then take [[PqIters]] per-subspace Lloyd iterations (ROUND(AVG,6)
-    * means — the kmeans-query determinism precedent); driver-held
-    * metadata throughout ([[collectCentroids]] precedent). */
+    * means — the kmeans-query determinism precedent), trained on the
+    * driver by [[lloydLocal]] over one collected sample, with the
+    * [[nearestCodeLocal]] replica of the encode kernel assigning. */
   /** (vec_id, embedding, nrm, nx) — the normalized frame every PQ face
     * starts from. */
   private[operators] def pqNormalizedOf(emb: DataFrame): DataFrame =
@@ -1397,52 +1427,23 @@ ${topKTailSql("scored")}"""
     pqNormalizedOf(Tables.embeddingsSpread(s, dir))
 
   private[operators] def pqTrainBooks(emb: DataFrame): Seq[Seq[SubCentroid]] = {
-    // seed codebooks: PqM × PqK × PqSubDim doubles — metadata
-    val seeds = emb.filter(col("vec_id") < PqK)
+    // ONE collect of the capped head (metadata); seeds = its first PqK
+    val sample = emb.filter(col("vec_id") < PqTrainCap)
       .select(col("vec_id"), col("nx")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1)
-    require(seeds.map(_._1).sameElements(0L until PqK),
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).toIndexedSeq
+    require(sample.take(PqK).map(_._1).sameElements(0L until PqK),
       s"PQ seeds must be vec_id 0..${PqK - 1} (positional decode)")
-    val seedBooks: Seq[Seq[SubCentroid]] = (0 until PqM).map { m =>
-      seeds.toSeq.map { case (id, nx) =>
-        SubCentroid(id.toInt, nx.slice(m * PqSubDim, (m + 1) * PqSubDim))
-      }
+    // Codes renumber contiguously after each update, relative order
+    // kept: tie-breaks pick the same VECTOR as the twin's original-id
+    // ordering, and the positional decode stays valid.
+    (0 until PqM).map { m =>
+      val subs = sample.map(_._2.slice(m * PqSubDim, (m + 1) * PqSubDim))
+      val seeds = subs.take(PqK).zipWithIndex
+        .map { case (sub, i) => SubCentroid(i, sub.toSeq) }
+      lloydLocal(subs, seeds, PqIters)(
+        book => i => nearestCodeLocal(subs(i), book).toLong)(
+        _.zipWithIndex.map { case ((_, cv), i) => SubCentroid(i, cv) })
     }
-    // per-subspace Lloyd training, all subspaces in one pass per
-    // iteration: explode the train head to (vec, m, sub) rows (8× a
-    // ≤PqTrainCap head — bounded), assign with the literal fold, update
-    // = ROUND(AVG, 6) means (the kmeans-query precedent: rounding makes
-    // the order-dependent float mean engine-identical), collect the
-    // PqM×PqK-row result between iterations (the MLlib shape). Codes
-    // renumber contiguously after each update — relative order is
-    // preserved, so tie-breaks pick the same VECTOR as the twin's
-    // original-id ordering, and the positional decode stays valid.
-    val trainSubs = emb.filter(col("vec_id") < PqTrainCap)
-      .select(col("vec_id"), col("nx"),
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .withColumn("sub", expr(s"slice(nx, m * $PqSubDim + 1, $PqSubDim)"))
-      .select("vec_id", "m", "sub")
-      .persist()
-    try {
-      def lloydPq(bs: Seq[Seq[SubCentroid]]): Seq[Seq[SubCentroid]] = {
-        val booksLit = typedLit(bs.map(_.toIndexedSeq).toIndexedSeq)
-        val rows = trainSubs
-          .withColumn("code",
-            nearestCodeIn(element_at(booksLit, col("m") + 1), col("sub")))
-          .groupBy("m", "code")
-          .agg(array((1 to PqSubDim).map(j =>
-            round(avg(element_at(col("sub"), j)), 6)): _*).as("cvec"))
-          .collect()
-        (0 until PqM).map { m =>
-          rows.filter(_.getInt(0) == m)
-            .map(r => (r.getInt(1), r.getSeq[Double](2)))
-            .sortBy(_._1)
-            .zipWithIndex
-            .map { case ((_, cv), i) => SubCentroid(i, cv) }.toSeq
-        }
-      }
-      (1 to PqIters).foldLeft(seedBooks)((b, _) => lloydPq(b))
-    } finally { trainSubs.unpersist(blocking = false); () }
   }
 
   /** Adds a `recon` column — the PQ reconstruction of `nx` — via the

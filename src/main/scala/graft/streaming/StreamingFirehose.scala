@@ -99,9 +99,9 @@ object StreamingFirehose {
    * bounded (maxOffsetsPerTrigger), so the cache is small and saves
    * re-reading the source per consumer. Metrics come from one small
    * `groupBy().collect()` over the cached batch, not from per-sink
-   * count() jobs; with a `handle`, a SECOND `groupBy().collect()` (max
-   * offset per partition) feeds the committed watermark — two aggregate
-   * jobs per batch.
+   * count() jobs; with a `handle`, the same aggregate also groups by
+   * (namespace, partition) and carries max(offset), which feeds the
+   * committed watermark — one aggregate job per batch either way.
    */
   def run(
       stream: DataFrame,
@@ -135,12 +135,20 @@ object StreamingFirehose {
           } else {
             mainSink(kept, batchId)
           }
-          val counts = annotated.groupBy(
-            col("__dropped"),
-            if (hasFailFlag) col("permanently_failed") else lit(false).as("permanently_failed"))
-            .count().collect()
+          // ONE aggregate feeds the metrics and, with a handle only (a
+          // stream may lack partition/offset), the watermark
+          val ns = if (annotated.columns.contains("namespace"))
+            col("namespace") else lit(engine.log.namespace)
+          val rows = annotated.groupBy(Seq(
+              col("__dropped"),
+              if (hasFailFlag) col("permanently_failed") else lit(false).as("permanently_failed")) ++
+              handle.toSeq.flatMap(_ => Seq(ns.as("ns"), col("partition"))): _*)
+            .agg(count(lit(1)).as("n"),
+              handle.toSeq.map(_ => max(col("offset")).as("top")): _*)
+            .collect()
           def total(p: (Boolean, Boolean) => Boolean): Long =
-            counts.collect { case r if p(r.getBoolean(0), r.getBoolean(1)) => r.getLong(2) }.sum
+            rows.collect { case r if p(r.getBoolean(0), r.getBoolean(1)) =>
+              r.getAs[Long]("n") }.sum
           onMetrics(BatchMetrics(
             batchId,
             input = total((_, _) => true),
@@ -151,12 +159,9 @@ object StreamingFirehose {
           // handle's critical section: a resolveAtCommitted ending either
           // includes this whole batch or none of it
           handle.foreach { h =>
-            val ns = if (annotated.columns.contains("namespace"))
-              col("namespace") else lit(engine.log.namespace)
-            val tops = annotated.groupBy(ns.as("ns"), col("partition"))
-              .agg(max(col("offset")).as("top")).collect()
-            h.commit(ConsumerState(tops.map(r =>
-              ConsumerPartition(r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap))
+            h.commit(ConsumerState(rows
+              .groupMapReduce(r => ConsumerPartition(r.getAs[String]("ns"), r.getAs[Int]("partition")))(
+                _.getAs[Long]("top"))(math.max)))
           }
         } finally annotated.unpersist()
         ()

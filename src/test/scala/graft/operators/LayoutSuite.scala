@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSuite}
+import graft.{FixtureStore, SparkEntry, SparkSuite}
 
 /** The z-order layout claim, made a number: per-cell min/max envelopes
   * must be NARROW on BOTH dimensions (that is what lets footer stats
@@ -32,32 +32,13 @@ class LayoutSuite extends SparkSuite {
   }
 
   test("writeClustered: every FILE's parquet footer bounds both dims") {
-    import scala.jdk.CollectionConverters._
     val out = java.nio.file.Files.createTempDirectory("zorder")
     try {
       val files = 8
       Layout.writeClustered(spark, sfDir, out.toString, files)
-      val conf = spark.sessionState.newHadoopConf()
-      val parts = java.nio.file.Files.walk(out).iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).toSeq
+      val parts = parquetFiles(out)
       assert(parts.size == files, s"expected $files files, got ${parts.size}")
 
-      // per-file min/max of both z dims, read from the FOOTER stats —
-      // the bytes a production reader prunes on
-      def bounds(p: java.nio.file.Path, colName: String): (Long, Long) = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toString), conf))
-        try {
-          val ccs = r.getFooter.getBlocks.asScala
-            .map(_.getColumns.asScala.find(_.getPath.toDotString == colName).get)
-          val mins = ccs.map(_.getStatistics.genericGetMin
-            .asInstanceOf[java.lang.Long].longValue)
-          val maxs = ccs.map(_.getStatistics.genericGetMax
-            .asInstanceOf[java.lang.Long].longValue)
-          (mins.min, maxs.max)
-        } finally r.close()
-      }
       val day = parts.map(bounds(_, "z_day"))
       val pk = parts.map(bounds(_, "z_pk"))
       val dayRange = (day.map(_._2).max - day.map(_._1).min).toDouble
@@ -71,9 +52,48 @@ class LayoutSuite extends SparkSuite {
       assert(pkSpan < 0.6, s"pk footer span $pkSpan")
       assert(daySpan + pkSpan < 1.0,
         s"joint span $daySpan + $pkSpan not better than a single-dim sort")
-    } finally {
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally FixtureStore.rmTree(out.toFile)
+  }
+
+  test("writeClustered: file bounds depend on the data alone, not on the RDDs built before") {
+    // repartitionByRange sampled with a seed built from the JVM-global
+    // RDD id, so two identical writes split the files differently once
+    // other RDDs were created in between
+    val a = java.nio.file.Files.createTempDirectory("zorderA")
+    val b = java.nio.file.Files.createTempDirectory("zorderB")
+    try {
+      Layout.writeClustered(spark, sfDir, a.toString, 8)
+      (1 to 5).foreach(i => spark.sparkContext.parallelize(1 to 10 * i, i).count())
+      Layout.writeClustered(spark, sfDir, b.toString, 8)
+      def layout(out: java.nio.file.Path): Seq[((Long, Long), (Long, Long))] =
+        parquetFiles(out).sortBy(_.getFileName.toString.take(10))
+          .map(p => (bounds(p, "z_day"), bounds(p, "z_pk")))
+      assert(layout(a).size == 8)
+      assert(layout(a) === layout(b))
+    } finally { FixtureStore.rmTree(a.toFile); FixtureStore.rmTree(b.toFile) }
+  }
+
+  private def parquetFiles(out: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(out).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+  }
+
+  /** Per-file min/max of one z dim, read from the FOOTER stats — the
+    * bytes a production reader prunes on. */
+  private def bounds(p: java.nio.file.Path, colName: String): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toString), spark.sessionState.newHadoopConf()))
+    try {
+      val ccs = r.getFooter.getBlocks.asScala
+        .map(_.getColumns.asScala.find(_.getPath.toDotString == colName).get)
+      val mins = ccs.map(_.getStatistics.genericGetMin
+        .asInstanceOf[java.lang.Long].longValue)
+      val maxs = ccs.map(_.getStatistics.genericGetMax
+        .asInstanceOf[java.lang.Long].longValue)
+      (mins.min, maxs.max)
+    } finally r.close()
   }
 }

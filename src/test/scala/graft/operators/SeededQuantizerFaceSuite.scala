@@ -146,14 +146,15 @@ class SeededQuantizerFaceSuite extends SparkSuite {
     val books = Similarity.pqTrainBooks(emb)
     (0 until Similarity.PqM).foreach { m =>
       val sub = slice(col("nx"), m * Similarity.PqSubDim + 1, Similarity.PqSubDim)
-      val both = emb.select(col("vec_id"),
+      val all3 = emb.select(col("vec_id"),
           Similarity.nearestCodeHofIn(typedLit(books(m)), sub).as("hof"),
           graft.functions.VectorFunctions.nearestCode(
-            typedLit(books(m)), sub).as("native"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      assert(both.nonEmpty)
-      both.foreach { case (id, h, k) =>
-        assert(h == k, s"subspace $m vec $id: fold=$h kernel=$k")
+            typedLit(books(m)), sub).as("native"), sub.as("sub"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
+          Similarity.nearestCodeLocal(r.getSeq[Double](3).toArray, books(m))))
+      assert(all3.nonEmpty)
+      all3.foreach { case (id, h, k, l) =>
+        assert(h == k && h == l, s"subspace $m vec $id: fold=$h kernel=$k driver=$l")
       }
     }
     // degenerate truth table: exact tie (lowest code wins), length
@@ -175,12 +176,43 @@ class SeededQuantizerFaceSuite extends SparkSuite {
     out.foreach { case (id, h, k) => assert(h == k, s"row $id: $h vs $k") }
     val byId = out.map(t => t._1 -> t._2).toMap
     assert(byId(0L) == 0 && byId(1L) == 3 && byId(2L) == -1)
+    // the driver replica on the non-null rows (a null sub has no driver form)
+    assert(Similarity.nearestCodeLocal(Array(1.0, 0.05), cb) == byId(0L))
+    assert(Similarity.nearestCodeLocal(Array(0.05, 1.0), cb) == byId(1L))
     val nullCb = lit(null).cast("array<struct<code:int,cvec:array<double>>>")
     val h = rows.limit(1).select(Similarity.nearestCodeHofIn(
       nullCb, col("sub")).as("c")).collect()(0)
     val k = rows.limit(1).select(graft.functions.VectorFunctions.nearestCode(
       nullCb, col("sub")).as("c")).collect()(0)
     assert(h.isNullAt(0) && k.isNullAt(0))
+  }
+
+  test("driver round6 ≡ Spark's round(x, 6) on half-ulp edges, both signs, tiny values and integers") {
+    // decimal halves at the 6th digit (not exact in binary — RoundBase
+    // rounds the SHORTEST decimal, so they go up), their one-ulp
+    // neighbours, exact binary halves (m/128), sub-1e-6 values,
+    // integers and the non-finite passthrough
+    val halves = Seq(5e-7, 1.5e-6, 2.5e-6, 0.1234565, 0.9999995, 1.0000005,
+      123.4567895, 0.0078125, 0.0234375)
+    val base = halves ++ halves.flatMap(d => Seq(math.nextUp(d), math.nextDown(d))) ++
+      Seq(1e-7, 4.9e-7, 5.1e-7, 1e-300, Double.MinPositiveValue,
+        0.0, 1.0, 3.0, 1e15, 9007199254740992.0, 1e22, Double.MaxValue)
+    val values = base ++ base.map(-_) ++
+      Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    def raw(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // literal (folded, interpreted eval) and a range-backed column
+    // (generated code)
+    val folded = spark.range(1).select(values.map(d => round(lit(d), 6)): _*)
+      .collect()(0).toSeq.map(_.asInstanceOf[Double])
+    val generated = spark.range(values.size)
+      .select(round(element_at(typedLit(values), col("id").cast("int") + 1), 6))
+      .collect().map(_.getDouble(0)).toSeq
+    values.indices.foreach { i =>
+      val d = Similarity.round6(values(i))
+      assert(raw(d) == raw(folded(i)), s"${values(i)}: driver $d, round(lit) ${folded(i)}")
+      assert(raw(d) == raw(generated(i)), s"${values(i)}: driver $d, round(col) ${generated(i)}")
+    }
+    assert(Similarity.round6(5e-7) == 1e-6 && Similarity.round6(-5e-7) == -1e-6)
   }
 
   test("past LiteralCentroidMax the assignment plans a broadcast join; below it, none") {
