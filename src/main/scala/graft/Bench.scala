@@ -1,5 +1,5 @@
 package graft
-import graft.metrics.{JobGroupCollector, LabeledRun}
+import graft.metrics.{HostLoad, JobGroupCollector, LabeledRun}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -21,7 +21,7 @@ object Bench {
     * `run / fork := true`) are excluded: they are part of THIS
     * invocation, not foreign load, and counting them made every
     * sbt-driven sweep read "1 other JVM" regardless of host state. */
-  private def loadState(): (Double, Int) = graft.metrics.HostLoad.state()
+  private def loadState(): (Double, Int) = HostLoad.state()
 
   /** Per-query trailing solo record, read from the newest
     * BENCH_SOLO_r*.json next to the working directory (or the file named
@@ -99,27 +99,22 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // "*" (and any other non-numeric local[...] spec) is a valid CPU
-    // setting for the session master but not a number — fall back to the
-    // host's core count for the load-guard threshold only.
-    val cpuCount = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     val (loadavg, otherJvms) = loadState()
-    // Threshold per the r14 judge: a start loadavg above 0.15 x cores or
-    // ANY foreign JVM means the sweep is contended. (r14's official sweep
-    // started at loadavg 7.5 — under the old cores/4 bar — and carried a
-    // 29x outlier.) A SOLO RECORD run (SPARK_GRAFT_SOLO_RECORD=1) holds
+    // The sweep is contended when the host is busy just before the
+    // session starts ([[HostLoad.busy]]: busy-CPU share over ~1 s, or
+    // ANY foreign JVM). Not the start loadavg: its 1-minute window still
+    // holds the previous Bench run's own local[32] burst, so
+    // back-to-back runs (the interleaved A/B protocol) flagged each
+    // other. A SOLO RECORD run (SPARK_GRAFT_SOLO_RECORD=1) also holds
     // the stricter r19-verdict bar: loadavg_start must be under 1.0 —
-    // the r19 solo record started at loadavg 2.13 under the lenient bar
-    // (its pgrep-only quiet check watched JVMs, not load) and carried
-    // 11 >=1.3x regressions on untouched code.
+    // the r19 solo record started at loadavg 2.13 under a lenient bar
+    // and carried 11 >=1.3x regressions on untouched code.
+    val busyShare = HostLoad.busyShare()
     val soloRecord = sys.env.get("SPARK_GRAFT_SOLO_RECORD").contains("1")
-    def hot(l: Double, j: Int): Boolean =
-      if (soloRecord) l >= 1.0 || j > 0
-      else l > 0.15 * cpuCount || j > 0
-    if (hot(loadavg, otherJvms))
-      System.err.println(f"[bench] WARNING: contended host (loadavg=$loadavg%.1f, " +
-        s"other JVMs=$otherJvms) — numbers will NOT reflect this build; rerun solo")
+    val hotStart = HostLoad.busy(busyShare, otherJvms) || (soloRecord && loadavg >= 1.0)
+    if (hotStart)
+      System.err.println(f"[bench] WARNING: contended host (busy share=$busyShare%.2f, " +
+        f"loadavg=$loadavg%.1f, other JVMs=$otherJvms) — numbers will NOT reflect this build; rerun solo")
     val spark = Tables.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", 32)
@@ -194,17 +189,17 @@ object Bench {
     // reader of the JSON alone (the round judge) must see whether the
     // host was quiet. r13's official sweep carried 9x host-noise
     // outliers that only the stderr warning and a later solo re-run
-    // exposed. The verdict reads the START loadavg plus the other-JVM
+    // exposed. The verdict reads the START busy share plus the other-JVM
     // count at BOTH endpoints — the end loadavg is dominated by this
     // run's own local[32] burst and would self-flag every sweep (it
     // stays in the record as data, not as a verdict input).
     // Any query that stayed >3x its trailing solo record even after
     // reruns is itself evidence of contention (or a real regression —
     // either way the sweep is not a trustworthy absolute record).
-    val contended = hot(loadavg, otherJvms) || jvmsEnd > 0 || suspects.nonEmpty
+    val contended = hotStart || jvmsEnd > 0 || suspects.nonEmpty
     val warn =
       if (contended)
-        f""","warning":"contended host (loadavg $loadavg%.1f->$loadEnd%.1f, other JVMs $otherJvms->$jvmsEnd, unresolved >3x-vs-solo: ${suspects.size}): timings inflated, compare against a solo run""""
+        f""","warning":"contended host (busy share $busyShare%.2f, loadavg $loadavg%.1f->$loadEnd%.1f, other JVMs $otherJvms->$jvmsEnd, unresolved >3x-vs-solo: ${suspects.size}): timings inflated, compare against a solo run""""
       else ""
     val rerunJson =
       if (reruns.isEmpty) ""
@@ -212,7 +207,7 @@ object Bench {
         .mkString(""","reruns":{""", ",", "}")
     def names(key: String, xs: Seq[String]): String =
       if (xs.isEmpty) "" else xs.map("\"" + _ + "\"").mkString(s""","$key":[""", ",", "]")
-    val record = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadavg%.2f,"loadavg_end":$loadEnd%.2f,"other_jvms_start":$otherJvms,"other_jvms_end":$jvmsEnd,"contended":$contended$rerunJson${names("suspect", suspects.toSeq)}${names("failed", failed)}$warn${soloRecordJson()}}"""
+    val record = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadavg%.2f,"busy_share_start":$busyShare%.2f,"loadavg_end":$loadEnd%.2f,"other_jvms_start":$otherJvms,"other_jvms_end":$jvmsEnd,"contended":$contended$rerunJson${names("suspect", suspects.toSeq)}${names("failed", failed)}$warn${soloRecordJson()}}"""
     println(record)
     // The full record is ~7 KB for 181 queries, and a reader that keeps
     // only a 2000-char tail of stdout truncates it mid-object. So the

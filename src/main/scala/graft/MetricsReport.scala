@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
  * with the numbers that would otherwise live only in test logs, so
  * recall/throughput/salting regressions are diffable across rounds:
  *
- *  - StreamBench end-to-end firehose rows/second;
  *  - ANN/dedup recalls vs brute force (the RecallSuite headline numbers);
  *  - `skew_guard` observation totals per guarded pairs query (salted
  *    pairs + hot bands actually seen at this SF).
@@ -232,14 +231,11 @@ object MetricsReport {
     guardedPairs.unpersist(blocking = false)
     naivePairs.unpersist(blocking = false)
 
-    // 4. end-to-end streaming throughput
-    val stream = StreamBench.run(spark, sfDir)
-
-    // 4b. streaming catalog-dedup ingest: plain vs Bloom-prefiltered
+    // 4. streaming catalog-dedup ingest: plain vs Bloom-prefiltered
     // face over the same staged stream + the measured bypass fraction
     val ingest = StreamBench.runDedupIngest(spark, sfDir)
     val curate = StreamBench.runCurateIngest(spark, sfDir)
-    // 4c. the native connector pair: graftlog MicroBatchStream source →
+    // 4b. the native connector pair: graftlog MicroBatchStream source →
     // V2 streaming sink (exactly-once asserted inside the drive)
     val glog = StreamBench.runGraftLog(spark, sfDir)
 
@@ -308,14 +304,6 @@ object MetricsReport {
          |    "guarded_pairs": $guardedN,
          |    "naive_pairs": $naiveN,
          |    "multiset_parity": true
-         |  },
-         |  "stream": {
-         |    "rows_per_sec": ${d0(stream.rowsPerSec)},
-         |    "rows": ${stream.rows},
-         |    "emitted": ${stream.emitted},
-         |    "filtered": ${stream.filtered},
-         |    "batches": ${stream.batches},
-         |    "seconds": ${d2(stream.seconds)}
          |  },
          |  "stream_dedup": {
          |    "plain_rows_per_sec": ${d0(ingest.plainRowsPerSec)},

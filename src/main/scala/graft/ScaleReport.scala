@@ -253,7 +253,8 @@ object ScaleReport {
         .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
       val cents = graft.operators.IvfIndex.loadCentroids(spark, path)
       val nprobe = 2
-      val cells = graft.operators.IvfIndex.rankedCells(cents, q.head._2, nprobe)
+      val cells = graft.operators.Similarity.probeCells(q.head._2,
+        graft.operators.Similarity.normLocal(q.head._2.map(_.toDouble)), cents, nprobe)
       val codesTotal = duData(new java.io.File(s"$path/codes"))
       val probedBytes = cells.map(c =>
         duData(new java.io.File(s"$path/codes/epoch=0/cell=$c"))).sum
@@ -575,11 +576,6 @@ object ScaleReport {
       name -> text
     }.find(t => scalingRatiosOf(t._2).nonEmpty)
   }
-
-  def priorScalingBaseline(cwd: String, currentRound: Int)
-      : Option[(String, Map[String, Map[String, Double]])] =
-    priorScalingBaselineText(cwd, currentRound)
-      .map { case (n, t) => n -> scalingRatiosOf(t) }
 
   /** The prior gate's `suspect` entries ("query/metric") from a METRICS
     * artifact — the escalation input: a wall flag demoted to suspect

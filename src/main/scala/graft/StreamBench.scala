@@ -1,10 +1,5 @@
 package graft
 
-import graft.engine.SidelineEngine
-import graft.filter.FilterSpec
-import graft.model.ConsumerState
-import graft.sideline.{SidelinePayload, SidelineType}
-import graft.sources.LogSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, md5}
 import org.apache.spark.sql.streaming.Trigger
@@ -12,64 +7,19 @@ import org.apache.spark.sql.streaming.Trigger
 import java.util.concurrent.atomic.LongAdder
 
 /**
- * Streaming-throughput benchmark (supplementary to [[Bench]]): drives the
- * FULL firehose path — file-stream source → per-batch chain re-read →
- * compiled drop predicate → routed sinks + metrics groupBy — over the
- * events table split into many files, with one active sideline step, and
- * reports end-to-end rows/second. The reference publishes no numbers
- * (BASELINE.md §1), so this is the engine's own single-node stream
- * throughput record at the given SF.
- *
- * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.StreamBench
+ * Streaming ingest drives that [[MetricsReport]] records: the graftlog
+ * source→sink loop, the catalog-dedup ingest and the curation ingest,
+ * each over a staged ×N copy of a fixture table, reported as end-to-end
+ * rows/second. The firehose's own throughput is the benchmark's
+ * `firehose_live` workload (`sidebench/`).
  */
 object StreamBench {
 
   final case class Result(rowsPerSec: Double, rows: Long, emitted: Long,
       filtered: Long, batches: Long, seconds: Double)
 
-  /** Drive the full firehose path over a staged many-file stream and
-    * measure end-to-end rows/second. Reused by [[MetricsReport]]. */
-  def run(spark: SparkSession, sfDir: String): Result = {
-    // stage the events table ×10 as a many-file stream input (each file
-    // is an admission unit; 48 files + maxFilesPerTrigger=12 → 4
-    // micro-batches of ~250k rows at sf0.1 — small batches only measure
-    // the fixed per-trigger overhead, not per-row throughput)
-    val stage = java.nio.file.Files.createTempDirectory("graft-streambench").toString
-    val ev = Tables.events(spark, sfDir)
-    (1 to 10).map(_ => ev).reduce(_ unionAll _)
-      .repartition(48).write.parquet(s"$stage/in")
-    val schema = spark.read.parquet(s"$stage/in").schema
-
-    // engine with one active drop-step so every batch exercises the
-    // control-store read + chain compilation the real firehose pays
-    val engine = SidelineEngine.inMemory(new LogSource {
-      val namespace = "bench"
-      def read(s: SparkSession): DataFrame = s.read.parquet(s"$stage/in")
-    })
-    engine.store.persist(SidelinePayload("bench-step", SidelineType.Start,
-      FilterSpec.KeyIn("event_type", Seq("error")),
-      ConsumerState.empty, None))
-
-    val emitted = new LongAdder; val filtered = new LongAdder
-    val batches = new LongAdder
-    val t0 = System.nanoTime()
-    val q = graft.streaming.StreamingFirehose.run(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "12").parquet(s"$stage/in"),
-      engine,
-      mainSink = (df, _) => { emitted.add(df.count()); batches.increment() },
-      onMetrics = m => filtered.add(m.filtered),
-      trigger = Trigger.AvailableNow(),
-      queryName = "graft-stream-bench")
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val total = emitted.sum + filtered.sum
-    Result(total / sec, total, emitted.sum, filtered.sum, batches.sum, sec)
-  }
-
-  /** The NATIVE-connector twin of [[run]]: the same ×10 events volume,
-    * but consumed through graftlog's MicroBatchStream (admission via
-    * `maxOffsetsPerTrigger`) and PRODUCED into a second graftlog
+  /** The events table ×10 consumed through graftlog's MicroBatchStream
+    * (admission via `maxOffsetsPerTrigger`) and PRODUCED into a second graftlog
     * through the V2 streaming sink (clustered write, task-local offset
     * assignment, staged-rename epoch commit) — the end-to-end
     * source→sink throughput of the connector pair. Exactly-once is
@@ -217,19 +167,5 @@ object StreamBench {
     val sec = (System.nanoTime() - t0) / 1e9
     val rows = spark.read.parquet(s"$stage/in").count()
     CurateIngestResult(rows / sec, rows, admitted.sum)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val r = run(spark, sfDir)
-    println(f"""{"metric":"stream_rows_per_sec","value":${r.rowsPerSec}%.0f,"unit":"rows/sec","rows":${r.rows},"emitted":${r.emitted},"filtered":${r.filtered},"batches":${r.batches},"seconds":${r.seconds}%.2f,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -75,46 +75,26 @@ object Tables {
     *    shipped since r7 — and it tracks the session's core count on
     *    every other master instead of pinning local-mode tuning.
     *
-    * Scan-task estimate = total input bytes / maxPartitionBytes (the
-    * same arithmetic FilePartition planning uses, floor 1; openCost is
-    * negligible at both ends). Results are partitioning-independent for
-    * every declared query (each is oracle-checked against an engine with
-    * no partitioning notion), so this is physical-only. */
-  def spread(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = load(spark, dir, name)
-    val cores = spark.sparkContext.defaultParallelism
-    val maxSplit = math.max(1L,
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-    val scanTasks = try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(math.max(1L, (fs.getContentSummary(p).getLength + maxSplit - 1) / maxSplit))
-    } catch { case e: Exception =>
-      // fail SAFE toward no added exchange (r20 ADVICE): at scale a
-      // transient FS error must never buy a full-corpus round-robin
-      // shuffle; the plan change is logged so it is attributable.
-      System.err.println(s"[graft] spread($name): size estimate failed " +
-        s"(${e.getMessage}) — skipping the parallelizing repartition")
-      None
-    }
-    scanTasks match {
-      case Some(t) if t < 2L * cores => df.repartition(2 * cores)
-      case _ => df
-    }
-  }
+    * The width estimate is [[spreadFrame]]'s: a fresh load is one
+    * file-scan leaf, sized total input bytes / maxPartitionBytes (the
+    * same arithmetic FilePartition planning uses; openCost is negligible
+    * at both ends). Results are partitioning-independent for every
+    * declared query (each is oracle-checked against an engine with no
+    * partitioning notion), so this is physical-only. */
+  def spread(spark: SparkSession, dir: String, name: String): DataFrame =
+    spreadFrame(load(spark, dir, name))
 
-  /** [[spread]] for an ALREADY-CONSTRUCTED frame (operator entry points
-    * taking caller frames, where there is no file to size): same policy,
-    * width estimated from the frame's LOGICAL plan — an explicit upstream
-    * repartition width, a checkpointed RDD's partition count, or the
-    * [[spread]] bytes/maxPartitionBytes arithmetic over file-scan leaves,
-    * whichever is widest. Deliberately NOT `df.rdd.getNumPartitions`
+  /** [[spread]]'s policy for any frame, freshly loaded or built by a
+    * caller: width estimated from the frame's LOGICAL plan — an explicit
+    * upstream repartition width, a checkpointed RDD's partition count,
+    * or bytes/maxPartitionBytes over file-scan leaves, whichever is
+    * widest. Deliberately NOT `df.rdd.getNumPartitions`
     * (r20 ADVICE): that forces physical planning of a frame that is then
     * re-planned, and under AQE eagerly EXECUTES upstream shuffle/broadcast
     * stages just to read a count — the curation pipeline passes
     * join-lineage frames through here. Estimation failure falls toward
-    * NO exchange (the at-scale-safe direction, as in [[spread]]).
+    * NO exchange (the at-scale-safe direction: a transient error must
+    * never buy a full-corpus round-robin shuffle).
     *
     * Known blind spots of the estimate: leaves it does not match — an
     * `InMemoryRelation` (a persisted frame), a `LocalRelation` or a

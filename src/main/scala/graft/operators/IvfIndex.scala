@@ -117,24 +117,18 @@ object IvfIndex {
     val cents = loadCentroids(s, path)
     val probeRows = queries.flatMap { case (qid, q) =>
       val qnrm = Similarity.normLocal(q.map(_.toDouble))
-      // rank ALL cells (there are only nlist) by the same (sim DESC,
-      // cent_id) order the fold uses, take the nprobe nearest
-      rankedCells(cents, q, nprobe).map(cell => (qid, q, qnrm, cell))
+      Similarity.probeCells(q, qnrm, cents, nprobe).map(cell => (qid, q, qnrm, cell))
     }
     import s.implicits._
-    val probes = probeRows.toDF("query_id", "q", "qnrm", "cell")
     // the partition column comes back typed by partition-inference; cast
     // to the centroid id type so the join key lines up
     val assigned = graft.ops.EpochCommit
       .filterCommitted(s.read.parquet(s"$path/assigned"), s"$path/assigned")
       .withColumn("cell", col("cell").cast("long"))
       .filter(col("cell").isin(probeRows.map(_._4).distinct: _*))
-    val scored = broadcast(probes)
-      .join(assigned.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim",
-        Similarity.dotCol("q", "embedding") / (col("qnrm") * col("nrm")))
-    Similarity.topKPerQuery(s, scored, topk)
+    Similarity.probeTopK(probeRows.toDF("query_id", "q", "qnrm", "cell"),
+      assigned.withColumnRenamed("vec_id", "neighbor_id"),
+      Similarity.dotCol("q", "embedding") / (col("qnrm") * col("nrm")), topk)
   }
 
   // ---- persisted IVF-PQ (codes on disk) -------------------------------
@@ -222,21 +216,6 @@ object IvfIndex {
     * shortlist-sized). Query normalization and cell ranking replicate
     * the fold arithmetic exactly, so results match the inline
     * `ann_ivfpq_residual_topk` row-for-row. */
-  /** The nprobe cells a query vector ranks highest — the driver-side
-    * cell ranking [[probe]]/[[probePq]] use (fold arithmetic: exact
-    * dots, sim DESC then cent_id ASC). Exposed so the scaling census
-    * can compute which partition directories a probe may touch. */
-  private[graft] def rankedCells(cents: Seq[Similarity.Centroid],
-      q: Seq[Float], nprobe: Int): Seq[Long] = {
-    val qnrm = Similarity.normLocal(q.map(_.toDouble))
-    cents.map { c =>
-      var dot = 0.0
-      var i = 0
-      while (i < q.length) { dot += q(i).toDouble * c.cvec(i); i += 1 }
-      (c.cent_id, dot / (qnrm * c.cnrm))
-    }.sortBy { case (id, sim) => (-sim, id) }.take(nprobe).map(_._1)
-  }
-
   def probePq(
       s: SparkSession, path: String, emb: DataFrame,
       queries: Seq[(Long, Seq[Float])],
@@ -251,10 +230,9 @@ object IvfIndex {
     val probeRows = queries.flatMap { case (qid, q) =>
       val qnrm = Similarity.normLocal(q.map(_.toDouble))
       val qx = q.map(_.toDouble / qnrm)
-      rankedCells(cents, q, nprobe).map(cell => (qid, qx, cell))
+      Similarity.probeCells(q, qnrm, cents, nprobe).map(cell => (qid, qx, cell))
     }
     import s.implicits._
-    val probes = probeRows.toDF("query_id", "qx", "cell")
     val codes = graft.ops.EpochCommit
       .filterCommitted(s.read.parquet(s"$path/codes"), s"$path/codes")
       .withColumn("cell", col("cell").cast("long"))
@@ -264,12 +242,9 @@ object IvfIndex {
       .withColumn("recon", zip_with(
         element_at(ncentsLit, col("cell").cast("int") + 1), col("recon0"),
         (a, b) => a + b))
-    val shortlist = Similarity.topKPerQuery(s,
-      broadcast(probes)
-        .join(codes.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", Similarity.dotCol("qx", "recon")),
-      shortK)
+    val shortlist = Similarity.probeTopK(probeRows.toDF("query_id", "qx", "cell"),
+      codes.withColumnRenamed("vec_id", "neighbor_id"),
+      Similarity.dotCol("qx", "recon"), shortK)
       .select("query_id", "neighbor_id")
     Similarity.exactRerankOf(emb, shortlist, topk)
   }

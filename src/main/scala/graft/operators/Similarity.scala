@@ -3,6 +3,7 @@ package graft.operators
 import graft.{FixtureStore, Tables}
 import graft.queries.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /**
@@ -754,8 +755,8 @@ object Similarity {
     * row blowup, zero sub-plan (the centroid array is a literal). The
     * `WithSim` form also surfaces the winning centroid-similarity (the
     * fold computes it anyway); [[assignCells]] keeps the original narrow
-    * schema for consumers that persist or aggregate the assignment
-    * ([[IvfIndex]], the Lloyd step). */
+    * schema for consumers that never read csim (the IVF and IVF-PQ
+    * probes, [[IvfIndex]]'s persisted layout). */
   private[operators] def assignCellsWithSim(emb: DataFrame, cents: Seq[Centroid]): DataFrame =
     emb.withColumn("best",
         nearestCentroid(typedLit(cents), col("embedding"), col("nrm")))
@@ -805,211 +806,65 @@ object Similarity {
         transform(col("embedding"), x => x.cast("double")).as("cvec"),
         col("nrm").as("cnrm"))
 
-  /** Past this many centroids the FLAT argmax itself is the measured
-    * bottleneck (docs/PLANS_r18.md §1: with the native kernel,
-    * assignment work N×nlist = N²/250 re-dominates past ~5M vectors ≈
-    * nlist ~20k). The TWO-LEVEL face ([[assignCellsWithSimTwoLevel]],
-    * N·(√nlist + members) probes instead of N·nlist) was built for this
-    * regime and measured 42× faster at 4.16M vectors — and REJECTED as
-    * a default by measurement: the standard IVF coarse-assignment
-    * approximation recovers only 16% cell agreement / 38% of the
-    * dedup's dropped set vs the exact flat quantizer on this
-    * near-isotropic embedding family, with or without Lloyd-trained
-    * reps (docs/PLANS_r18.md §6). This constant marks the measured
-    * regime boundary and sizes the experimental face's tests; the
-    * DEFAULT stays the exact flat quantizer at every nlist. */
-  private[operators] val TwoLevelMin = 16384L
-
-  /** Deterministic group count: ⌊√nlist⌋ floored at 1 — balances the
-    * two probe phases (reps vs members) at √nlist each. */
-  private[operators] def twoLevelGroups(nlist: Long): Long =
-    math.max(1L, math.sqrt(nlist.toDouble).toLong)
-
-  /** The TWO-LEVEL quantizer face — EXPERIMENTAL, deliberately NOT a
-    * default face (measured rejection, docs/PLANS_r18.md §6): group
-    * representatives are Lloyd-trained from the centroids
-    * ([[twoLevelReps]]); every centroid joins the group of its nearest
-    * rep (the IDENTICAL [[nearestCentroid]] fold semantics — strict
-    * `>`, ascending rep id on ties); a corpus row probes the reps, then
-    * the winning group's member list. All quantizer metadata moves as
-    * ONE broadcast row {members_map} plus the rep literal; the corpus
-    * never shuffles for assignment (the broadcast-face invariant). The
-    * reps array is RESTRICTED to non-empty groups (collected as
-    * group-id metadata, ≤ √nlist longs), so the map lookup is total by
-    * construction — no row can probe an empty group. Within the chosen
-    * group the assignment is EXACT (same fold, true cent_ids), which is
-    * the suite's within-group pin: wherever the flat argmax's winner
-    * lives in the probed group, two-level ≡ flat bit-for-bit.
-    *
-    * Measured at 4.16M vectors / nlist 16640 (docs/PLANS_r18.md): the
-    * assignment pass is 16.5 s vs flat's 686.6 s (42×) and the full
-    * dedup_semantic completes deterministically — but single-probe
-    * coarse assignment recovers only 16% cell agreement and 38% of the
-    * dedup dropped set vs exact flat on this near-isotropic embedding
-    * family (recall drive at 500k vectors; Lloyd training moved
-    * agreement 13→16%, recall within noise). Kept suite-pinned for a
-    * future clustered-embedding family or an explicit opt-in; never a
-    * silent default. */
-  /** Lloyd rounds for the two-level REPS: seeded reps over random-ish
-    * 64-dim vectors group centroids near-arbitrarily (measured: 13%
-    * cell agreement with flat, 39% dropped-set recall at 500k vectors),
-    * so the coarse level is TRAINED — the classic IVF/IMI design, with
-    * the engine's kmeans determinism precedent (ROUND(AVG, 6)
-    * coordinate means, exact driver-side norms, renumbered ascending).
-    * Two rounds over nlist METADATA rows per round. */
-  private[operators] val TwoLevelLloydRounds = 2
-
-  /** The TRAINED two-level reps for a centroid relation — seed = the
-    * first ⌊√nlist⌋ centroids, then [[TwoLevelLloydRounds]] Lloyd
-    * rounds (renumbered ascending; empty groups drop naturally). Shared
-    * with the suite so the driver replica probes the SAME reps. */
-  private[operators] def twoLevelReps(
-      cents: DataFrame, nlist: Long): Seq[Centroid] = {
-    // seed from the FIRST floor(sqrt(nlist)) centroids by cent_id
-    // ORDER, not by id VALUE (`cent_id < twoLevelGroups(nlist)` assumed
-    // ids dense from 0 — sparse or offset ids selected zero rows and
-    // reps0.head threw bare NoSuchElementException; r18 advice)
-    val reps0 = collectCentroids(
-      cents.orderBy("cent_id").limit(twoLevelGroups(nlist).toInt))
-    require(reps0.nonEmpty,
-      s"two-level reps: no centroids to seed from (nlist=$nlist, " +
-        s"groups=${twoLevelGroups(nlist)}) — is the centroid relation empty?")
-    val dim = reps0.head.cvec.length
-    def lloyd(reps: Seq[Centroid]): Seq[Centroid] = {
-      val repsL = typedLit(reps)
-      cents
-        .withColumn("grp", graft.functions.VectorFunctions.nearestCentroid(
-          repsL, col("cvec"), col("cnrm")).getField("cent_id"))
-        .groupBy("grp")
-        .agg(array((1 to dim).map(j =>
-          round(avg(element_at(col("cvec"), j)), 6)): _*).as("cvec"))
-        .collect().toSeq
-        .map(r => r.getLong(0) -> r.getSeq[Double](1))
-        .sortBy(_._1).zipWithIndex
-        .map { case ((_, cv), i) => Centroid(i.toLong, cv, normLocal(cv)) }
-    }
-    (1 to TwoLevelLloydRounds).foldLeft(reps0)((r, _) => lloyd(r))
-  }
-
-  /** Multi-probe extension (r19 verdict task 2): `probes` = how many
-    * nearest GROUPS a row scans before taking the exact argmax over
-    * their united member lists. p = 1 is bit-identical to the r18
-    * single-probe face. Cost per row: p sequential rep-kernel passes
-    * (each over ≤ ⌊√nlist⌋ reps, later passes over literal-filtered
-    * arrays) + p member-kernel passes (each ~√nlist centroids) — i.e.
-    * work ≈ (p+1)·√nlist vs flat's nlist, a nlist/((p+1)·√nlist)
-    * theoretical ceiling on the speedup. Winner selection mirrors the
-    * flat argmax exactly: strictly greater csim wins, an equal-csim
-    * tie keeps the LOWER cent_id, degenerate (-1) per-group winners
-    * and missing groups (probes > live groups) are skipped — so
-    * whenever flat's true winner lives in ANY probed group, multi-probe
-    * ≡ flat bit-for-bit (the suite's within-group pin, generalized). */
-  private[operators] def assignCellsWithSimTwoLevel(
-      emb: DataFrame, cents: DataFrame, nlist: Long,
-      probes: Int = 1): DataFrame = {
-    require(probes >= 1, s"probes must be >= 1, got $probes")
-    val repsAll = twoLevelReps(cents, nlist)
-    val repsLit = typedLit(repsAll)
-    // each centroid joins its nearest rep's group (metadata-sized job;
-    // the kernel accepts the double-widened cvec directly)
-    val grouped = cents.withColumn("grp",
-      graft.functions.VectorFunctions.nearestCentroid(
-        repsLit, col("cvec"), col("cnrm"))
-        .getField("cent_id"))
-    val packed = grouped.groupBy("grp")
-      .agg(sort_array(collect_list(struct(
-        col("cent_id"), col("cvec"), col("cnrm")))).as("members"))
-      .agg(
-        map_from_entries(sort_array(collect_list(
-          struct(col("grp"), col("members"))))).as("members_map"),
-        sort_array(collect_list(col("grp"))).as("live_grps"))
-    // restrict the rep list to non-empty groups so element_at is total
-    val liveGrps = packed.select(explode(col("live_grps"))).collect()
-      .map(_.getLong(0)).toSet
-    val repsLiveSeq = repsAll.filter(c => liveGrps.contains(c.cent_id))
-    val repsLive = typedLit(repsLiveSeq)
-    val p = math.min(probes, repsLiveSeq.size)
-    val k = graft.functions.VectorFunctions.nearestCentroid _
-    val base = emb.crossJoin(broadcast(packed.select("members_map")))
-    if (p == 1) {
-      // the r18 single-probe face VERBATIM (native kernel argmax over
-      // the reps, then over the winning group) — suite-pinned
-      // bit-identity is preserved by not touching this path
-      base
-        .withColumn("grp",
-          k(repsLive, col("embedding"), col("nrm")).getField("cent_id"))
-        .withColumn("best",
-          k(element_at(col("members_map"), col("grp")),
-            col("embedding"), col("nrm")))
-        .select(col("vec_id"), col("best").getField("cent_id").as("cell"),
-          col("best").getField("csim").as("csim"), col("embedding"), col("nrm"))
-    } else {
-      // p ≥ 2: EVERYTHING under single-evaluation HOFs. The first
-      // attempt computed grp_i columns by sequential exclusion
-      // (filter + kernel per probe) and folded p winner expressions
-      // with nested when() — CollapseProject inlined each grp tree
-      // into every later reference and the expression DUPLICATED
-      // exponentially (p=8 never finished; measured p=2 already 10×
-      // the p=1 wall). Here each stage is one array expression whose
-      // lambda arguments are evaluated exactly once: rank ALL reps
-      // (one transform + array_sort by (-csim, id) — ascending-id on
-      // ties like the kernel), slice the top p, map each probed group
-      // to its EXACT member-kernel winner, fold once (strict csim,
-      // lower cent_id on ties — the flat argmax's selection rule;
-      // degenerate (-1) winners lose).
-      val ranked = array_sort(transform(repsLive, r => struct(
-        (lit(0.0) - nearestCentroidHofSim(r, col("embedding"), col("nrm")))
-          .as("negsim"),
-        r.getField("cent_id").as("cent_id"))))
-      val winners = transform(
-        slice(ranked, 1, p),
-        g => k(element_at(col("members_map"), g.getField("cent_id")),
-          col("embedding"), col("nrm")))
-      val best = aggregate(winners,
-        struct(lit(-1L).as("cent_id"), lit(-2.0).as("csim")),
-        (acc, w) =>
-          when(w.isNull || w.getField("cent_id") === -1L, acc)
-            .otherwise(when(acc.getField("cent_id") === -1L, w)
-              .otherwise(when(
-                w.getField("csim") > acc.getField("csim") ||
-                  (w.getField("csim") === acc.getField("csim") &&
-                    w.getField("cent_id") < acc.getField("cent_id")), w)
-                .otherwise(acc))))
-      base
-        .withColumn("best", best)
-        .select(col("vec_id"), col("best").getField("cent_id").as("cell"),
-          col("best").getField("csim").as("csim"), col("embedding"), col("nrm"))
-    }
-  }
-
-  /** One centroid's cosine vs a vector — the [[nearestCentroidHof]]
-    * inner formula as a standalone expression (left-associated fold,
-    * same arithmetic as the native kernel computes per entry). */
-  private[operators] def nearestCentroidHofSim(c: Column, vec: Column, nrm: Column): Column =
-    aggregate(
-      zip_with(vec, c.getField("cvec"),
-        (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (a, x) => a + x) / (nrm * c.getField("cnrm"))
-
   /** `sqrt(dotCol(v, v))` on the driver: the same left fold from 0.0 (a
     * float input widens exactly, so callers may pass it mapped). */
-  private[operators] def normLocal(v: Seq[Double]): Double =
+  private[graft] def normLocal(v: Seq[Double]): Double =
     math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
 
-  /** Exact driver-side replica of the [[nearestCentroid]] fold for one
-    * query vector: same left-associated double accumulation, same strict
-    * `>` improvement over the cent_id-sorted list, same `exclude` probe
-    * semantics — so probe cells computed on the driver match what the
-    * fold (and the DuckDB oracle) would pick, bit for bit. */
+  /** Exact driver-side replica of the [[nearestCentroid]] kernel for one
+    * query vector: the same left-associated double dot over the
+    * cent_id-sorted list and the same selection rule — a centroid whose
+    * length differs from `q`, or whose `qnrm · cnrm` is 0, is skipped;
+    * an improvement needs a STRICT `>` under Spark's double ordering
+    * (NaN above every number), so ties keep the lowest cent_id. Cells
+    * in `exclude` are skipped too. -1 when no cell is eligible (the
+    * kernel's initial accumulator). Matching the kernel bit for bit is
+    * what lets driver-picked probe cells agree with the fold and with
+    * the DuckDB oracle's `ORDER BY csim DESC, cent_id`. */
   private[operators] def nearestCentroidLocal(q: Seq[Float], qnrm: Double,
-      cents: Seq[Centroid], exclude: Long = -1L): Long =
-    cents.foldLeft((-1L, -2.0)) { case (acc, c) =>
-      var dot = 0.0
-      var i = 0
-      while (i < q.length) { dot += q(i).toDouble * c.cvec(i); i += 1 }
-      val csim = dot / (qnrm * c.cnrm)
-      if (c.cent_id != exclude && csim > acc._2) (c.cent_id, csim) else acc
-    }._1
+      cents: Seq[Centroid], exclude: Set[Long] = Set.empty): Long = {
+    var best = -1L
+    var bestSim = -2.0
+    cents.foreach { c =>
+      val div = qnrm * c.cnrm
+      if (c.cvec.length == q.length && div != 0.0 && !exclude.contains(c.cent_id)) {
+        var dot = 0.0
+        var i = 0
+        while (i < q.length) { dot += q(i).toDouble * c.cvec(i); i += 1 }
+        val csim = dot / div
+        if (SQLOrderingUtil.compareDoubles(csim, bestSim) > 0) {
+          best = c.cent_id
+          bestSim = csim
+        }
+      }
+    }
+    best
+  }
+
+  /** The ONE driver-side probe ranking of the IVF family: a query's
+    * `nprobe` nearest cells, nearest first — [[nearestCentroidLocal]]
+    * repeated, each round excluding the cells already taken (≡ the
+    * oracle's `row_number() OVER (ORDER BY csim DESC, cent_id)` cut at
+    * nprobe). Fewer than `nprobe` when fewer cells are eligible. */
+  private[graft] def probeCells(q: Seq[Float], qnrm: Double,
+      cents: Seq[Centroid], nprobe: Int): Seq[Long] =
+    (1 to nprobe).foldLeft(Vector.empty[Long]) { (taken, _) =>
+      val cell = nearestCentroidLocal(q, qnrm, cents, taken.toSet)
+      if (cell < 0) taken else taken :+ cell
+    }
+
+  /** The ONE cell-probe tail of the IVF family: each (query_id, cell)
+    * probe row meets its cell's `corpus` rows (neighbor_id, cell, …)
+    * through a broadcast of the small probe frame — the corpus never
+    * shuffles for it — minus the query itself, scored by `sim`, cut to
+    * the top `k` per query. */
+  private[operators] def probeTopK(probes: DataFrame, corpus: DataFrame,
+      sim: Column, k: Int = TopK): DataFrame =
+    topKPerQuery(probes.sparkSession,
+      broadcast(probes).join(corpus, Seq("cell"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .withColumn("sim", sim),
+      k)
 
   /** IVF-style ANN: a deterministic coarse quantizer (the first
     * `NumCentroids` vectors stand in for trained centroids — swap in
@@ -1099,9 +954,7 @@ object Similarity {
     * kernel), then takes Spark's `round(avg(x), 6)` per cell and dim: a
     * double sum from 0.0 in vec_id order, ÷ count, [[round6]] (the
     * rounding absorbs Spark's partition-order sums). `cells` rebuilds
-    * the list from the non-empty cells' (id, mean), id-ascending. The
-    * two-level reps ([[twoLevelReps]]) train over the centroid table,
-    * which grows with the corpus, so they stay on Spark. */
+    * the list from the non-empty cells' (id, mean), id-ascending. */
   private[operators] def lloydLocal[C](vecs: IndexedSeq[Array[Double]], seeds: Seq[C],
       rounds: Int)(assign: Seq[C] => Int => Long)(
       cells: Seq[(Long, Seq[Double])] => Seq[C]): Seq[C] =
@@ -1148,22 +1001,15 @@ object Similarity {
       val sample = ivfSample(Tables.embeddings(s, dir))
       val trained = trainIvf(sample)
       // nprobe=2: the 2 nearest trained cells per query vector,
-      // computed on the driver by the exact fold replica (the second
-      // probe excludes the first's winner)
+      // computed on the driver by the exact kernel replica
       val probeRows = sample.filter(_._1 < NumQueries)
         .flatMap { case (qid, q, qnrm) =>
-          val p1 = nearestCentroidLocal(q, qnrm, trained)
-          val p2 = nearestCentroidLocal(q, qnrm, trained, exclude = p1)
-          Seq((qid, q, qnrm, p1), (qid, q, qnrm, p2))
+          probeCells(q, qnrm, trained, NProbe).map(cell => (qid, q, qnrm, cell))
         }
       import s.implicits._
-      val probes = probeRows.toDF("query_id", "q", "qnrm", "cell")
-      val assigned = assignCells(emb, trained)
-      val scored = broadcast(probes)
-        .join(assigned.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", dotCol("q", "embedding") / (col("qnrm") * col("nrm")))
-      topKPerQuery(s, scored)
+      probeTopK(probeRows.toDF("query_id", "q", "qnrm", "cell"),
+        assignCells(emb, trained).withColumnRenamed("vec_id", "neighbor_id"),
+        dotCol("q", "embedding") / (col("qnrm") * col("nrm")))
     },
     Some {
       val trainedList = (1 to Dim)
@@ -1591,15 +1437,12 @@ ${topKTailSql("scored")}"""
     * the vectors themselves, not per-cell residuals — residual encoding
     * tightens recall at equal bits but needs per-cell books; the plan
     * shape (and the oracle) is identical. Probes are computed on the
-    * driver by the exact fold replica ([[nearestCentroidLocal]], the
-    * kmeans-query pattern ≡ the twin's `ORDER BY csim DESC, cent_id`
-    * window). */
+    * driver by [[probeCells]]. */
   /** The nprobe=2 probe frame of both IVF-PQ faces, computed on the
     * driver from the normalized frame `emb` ([[pqNormalizedOf]]): per
-    * query vector, its two nearest seeded `cents` by the exact fold
-    * replica ([[nearestCentroidLocal]], the second probe excluding the
-    * first's winner) ≡ the twin's `iprobes` window ([[ivfCellsSql]]).
-    * Rows (query_id, qx, cell). */
+    * query vector, its two nearest seeded `cents` by [[probeCells]] ≡
+    * the twin's `iprobes` window ([[ivfCellsSql]]). Rows (query_id, qx,
+    * cell). */
   private def twoCellProbes(s: SparkSession, emb: DataFrame, cents: Seq[Centroid]): DataFrame = {
     val qhead = emb.filter(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("nx"))
@@ -1608,9 +1451,7 @@ ${topKTailSql("scored")}"""
         r.getSeq[Double](3)))
       .sortBy(_._1)
     val probeRows = qhead.flatMap { case (qid, q, qnrm, qx) =>
-      val p1 = nearestCentroidLocal(q, qnrm, cents)
-      val p2 = nearestCentroidLocal(q, qnrm, cents, exclude = p1)
-      Seq((qid, qx, p1), (qid, qx, p2))
+      probeCells(q, qnrm, cents, NProbe).map(cell => (qid, qx, cell))
     }
     import s.implicits._
     probeRows.toDF("query_id", "qx", "cell")
@@ -1661,12 +1502,8 @@ ${topKTailSql("scored")}"""
               expr("transform(embedding, x -> cast(x as double) / nrm)")),
           books)
         .select(col("vec_id").as("neighbor_id"), col("cell"), col("recon"))
-      val shortlist = topKPerQuery(s,
-        broadcast(twoCellProbes(s, emb, cents))
-          .join(corpus, Seq("cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("sim", dotCol("qx", "recon")),
-        PqShortK)
+      val shortlist = probeTopK(twoCellProbes(s, emb, cents), corpus,
+        dotCol("qx", "recon"), PqShortK)
         .select("query_id", "neighbor_id")
       exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
@@ -1734,12 +1571,8 @@ ${topKTailSql("scored")}"""
       val corpus = pqWithRecon(resFrame.withColumn("nx", col("rx")), books)
         .withColumn("fullrecon", zip_with(col("ncv"), col("recon"), (a, b) => a + b))
         .select(col("vec_id").as("neighbor_id"), col("cell"), col("fullrecon"))
-      val shortlist = topKPerQuery(s,
-        broadcast(twoCellProbes(s, pqNormalized(s, dir), cents))
-          .join(corpus, Seq("cell"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .withColumn("sim", dotCol("qx", "fullrecon")),
-        PqShortK)
+      val shortlist = probeTopK(twoCellProbes(s, pqNormalized(s, dir), cents),
+        corpus, dotCol("qx", "fullrecon"), PqShortK)
         .select("query_id", "neighbor_id")
       exactRerankOf(Tables.embeddings(s, dir), shortlist)
     },
@@ -1824,15 +1657,6 @@ ${topKTailSql("scored")}"""
           col("nrm").as("cnrm")))
       assignCellsWithSim(emb, cents)
     } else assignCellsWithSimBcast(emb, seededCentsDf(emb, nlist))
-    // NOT a third face: two-level coarse assignment was built as the
-    // r17-flagged asymptotic fix ([[assignCellsWithSimTwoLevel]]),
-    // measured 42× faster than flat at 4.16M vectors — and REJECTED as
-    // the default by measurement: 16% cell agreement / 38% dropped-set
-    // recall vs the exact flat quantizer on this near-isotropic
-    // embedding family (docs/PLANS_r18.md §6). Exact-flat through the
-    // native kernel is affordable to ~5M vectors; past that, prefer
-    // provisioning or an EXPLICIT approximate-face opt-in, never a
-    // silent contract change.
   }
 
   /** Corpus row count, ONE action per (session, dir, corpus mtime)
@@ -1854,16 +1678,6 @@ ${topKTailSql("scored")}"""
   private def seededAssigned(s: SparkSession, dir: String): DataFrame =
     seededAssignedOf(Tables.embeddingsSpread(s, dir),
       Some(embeddingsCountFor(s, dir)))
-
-  /** PUBLIC face of the seeded coarse-quantizer assignment — (vec_id,
-    * cell, csim, embedding, nrm) for an embeddings frame. The library
-    * API a pipeline uses to bucket its own vectors (and what the xcap
-    * drive scripts probe for the face/kernel plan markers): picks the
-    * literal or broadcast quantizer face by [[adaptiveNlist]] exactly as
-    * every internal consumer does. `precount` skips the sizing count
-    * when the caller already knows the corpus size. */
-  def quantizerAssignment(emb: DataFrame, precount: Option[Long] = None): DataFrame =
-    seededAssignedOf(emb, precount)
 
   /** DuckDB twin of [[seededAssigned]]: CTEs ending in
     * `assigned(vec_id, cell, csim, embedding, nrm)`. The centroid count
